@@ -161,6 +161,8 @@ def test_render_spans_golden_on_reference_fixture(spark):
     )
 
     fixture = "/root/reference/test_data/io/test_conll/conll03_test.txt"
+    if not os.path.exists(fixture):
+        pytest.skip("reference CoNLL-2003 fixture not present")
     toks = conll_2003_to_dataframe(
         spark, fixture, column_names=["ent"], iob_columns=[True]
     )

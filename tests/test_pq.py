@@ -251,10 +251,8 @@ class TestDurableIvfPqIndex:
     proven from the physical plan, with results identical to the
     in-memory composition."""
 
-    def _setup(self, spark, tmp_path):
+    def _frames(self, spark):
         import pyspark.sql.functions as F
-
-        from text_extensions_for_pandas_spark.operators import similarity as S
 
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
             "vec_id",
@@ -269,9 +267,32 @@ class TestDurableIvfPqIndex:
                 F.array(*[F.slice("embedding", s * 8 + 1, 8) for s in range(8)])
             ).alias("sub_id", "embedding"),
         ).select("sub_id", "centroid_id", "embedding")
+        return emb, centroids, codebooks
+
+    def _setup(self, spark, tmp_path):
+        from text_extensions_for_pandas_spark.operators import similarity as S
+
+        emb, centroids, codebooks = self._frames(spark)
         path = str(tmp_path / "ivfpq")
         S.write_ivfpq_index(emb, centroids, codebooks, path)
         return S, emb, centroids, codebooks, path
+
+    def test_failing_writer_raises_its_own_error(self, spark, tmp_path):
+        """One artifact writer fails: its own exception propagates, and
+        the other writers still finish before it does."""
+        import os
+
+        from text_extensions_for_pandas_spark.operators import similarity as S
+
+        emb, centroids, codebooks = self._frames(spark)
+        # the assignment prunes the extra column; only the centroids
+        # writer evaluates it
+        bad = centroids.withColumn("boom", F.raise_error("centroids writer"))
+        path = str(tmp_path / "ivfpq")
+        with pytest.raises(Exception, match="centroids writer"):
+            S.write_ivfpq_index(emb, bad, codebooks, path)
+        for table in ("codes", "codebooks"):
+            assert os.path.exists(f"{path}/{table}/_SUCCESS")
 
     def test_search_matches_in_memory_composition(self, spark, tmp_path):
         import pyspark.sql.functions as F

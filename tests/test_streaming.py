@@ -790,10 +790,11 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
         .parquet(src)
     )
     out = str(tmp_path / "out")
+    state = str(tmp_path / "state")
     q = streaming_prep_ingest(
         stream,
         bp,
-        state_dir=str(tmp_path / "state"),
+        state_dir=state,
         out_path=out,
         checkpoint=str(tmp_path / "ckpt"),
         min_words=30,
@@ -801,6 +802,10 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
         n_shards=2,
     ).start()
     q.awaitTermination(300)
+    # job budget: each batch materializes its kept paragraphs and its
+    # final rows once and writes four tables from them
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 29
 
     got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
     # doc 6 failed the gopher word count; doc 3's single paragraph was
@@ -831,7 +836,7 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
     q2 = streaming_prep_ingest(
         stream,
         bp,
-        state_dir=str(tmp_path / "state"),
+        state_dir=state,
         out_path=out,
         checkpoint=str(tmp_path / "ckpt2"),
         min_words=30,
@@ -845,6 +850,27 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
         ).collect())
     )
     assert after == before
+
+    # state after the replay: every hash once, and each batch's shard
+    # totals are the shard's highest position so far
+    for sub, col in (("para_index", "para_hash"), ("text_index", "text_hash")):
+        hashes = [
+            r[0] for r in spark.read.parquet(f"{state}/{sub}").select(col).collect()
+        ]
+        assert hashes and len(hashes) == len(set(hashes))
+    landed = spark.read.parquet(out).select("batch", "shard", "pos").collect()
+    totals = spark.read.parquet(f"{state}/shard_totals").collect()
+    assert sorted((r["batch"], r["shard"]) for r in totals) == [
+        (0, 0), (0, 1), (1, 0), (1, 1)
+    ]
+    for r in totals:
+        assert r["n"] == max(
+            [
+                x["pos"] for x in landed
+                if x["shard"] == r["shard"] and x["batch"] <= r["batch"]
+            ],
+            default=0,
+        )
 
 
 def test_streaming_html_extract_is_stream_transparent(spark, tmp_path):

@@ -1008,6 +1008,21 @@ def remove_repeated_substrings(
     )
 
 
+def _rebuild_text(piece: str, join_sep: str, keep=None):
+    """Aggregate: a group's ``piece`` rows joined with ``join_sep`` in
+    ``pos`` order, leaving out rows where ``keep`` is false or NULL."""
+    row = F.struct("pos", piece)
+    return F.array_join(
+        F.transform(
+            F.array_sort(
+                F.collect_list(row if keep is None else F.when(keep, row))
+            ),
+            lambda s: s[piece],
+        ),
+        join_sep,
+    )
+
+
 def dedup_paragraphs(
     documents: DataFrame,
     sep_regex: str = "\n+",
@@ -1064,17 +1079,7 @@ def dedup_paragraphs(
     rebuilt = kept.groupBy(doc_col).agg(
         F.count("*").alias("n_paras"),
         F.sum(F.col("__keep").cast("long")).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("__keep"), F.struct("pos", "__para"))
-                    )
-                ),
-                lambda s: s["__para"],
-            ),
-            join_sep,
-        ).alias("dedup_text"),
+        _rebuild_text("__para", join_sep, F.col("__keep")).alias("dedup_text"),
     )
     return documents.select(doc_col).join(rebuilt, doc_col, "left").select(
         doc_col,
@@ -1138,17 +1143,7 @@ def dedup_paragraphs_incremental(
     rebuilt = flagged.groupBy(doc_col).agg(
         F.count("*").alias("n_paras"),
         F.sum(F.coalesce(F.col("__keep").cast("long"), F.lit(0))).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("__keep"), F.struct("pos", "__para"))
-                    )
-                ),
-                lambda s: s["__para"],
-            ),
-            join_sep,
-        ).alias("dedup_text"),
+        _rebuild_text("__para", join_sep, F.col("__keep")).alias("dedup_text"),
     )
     out = new_docs.select(doc_col).join(rebuilt, doc_col, "left").select(
         doc_col,
@@ -1252,17 +1247,7 @@ def remove_boilerplate(
     rebuilt = flagged.groupBy(doc_col).agg(
         F.count("*").alias("n_lines"),
         F.sum(F.col("__keep").cast("long")).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("__keep"), F.struct("pos", "__line"))
-                    )
-                ),
-                lambda s: s["__line"],
-            ),
-            join_sep,
-        ).alias("clean_text"),
+        _rebuild_text("__line", join_sep, F.col("__keep")).alias("clean_text"),
     )
     return documents.select(doc_col).join(rebuilt, doc_col, "left").select(
         doc_col,

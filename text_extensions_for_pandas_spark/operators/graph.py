@@ -25,10 +25,10 @@ Scale design:
   ⟺ fixpoint), and a single ``agg`` both materializes the persisted round
   result and returns the convergence scalar.  No separate checkpoint job,
   no changed-row join.
-* Lineage is truncated with ``localCheckpoint`` every few rounds — without
-  truncation the plan doubles per iteration and the driver, not the
-  cluster, becomes the bottleneck.  Between truncations, ``persist()``
-  blocks recomputation.
+* Lineage is truncated every round (``cut_lineage``, lazily, so the
+  round's convergence action materializes the cut in the same job) —
+  without truncation the plan doubles per iteration and the driver, not
+  the cluster, becomes the bottleneck.
 * For graphs with giant components / adversarial chains the
   large-star/small-star variant (Kiveris et al., "Connected Components in
   MapReduce and Beyond", SoCC'14) shaves constants; min-propagation with

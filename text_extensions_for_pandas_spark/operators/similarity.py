@@ -919,8 +919,10 @@ def write_ivfpq_index(
     # the three artifact tables are independent writes to disjoint
     # directories; submitting them from a small thread pool lets the
     # scheduler overlap their (small, driver-latency-bound) jobs instead
-    # of paying three sequential commits (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    # of paying three sequential commits (guide §2.6).  Results are read
+    # in completion order, so the first writer to fail raises its own
+    # exception
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
     def _w_codes() -> None:
         joined.write.mode("overwrite").partitionBy("cluster_id").parquet(
@@ -940,9 +942,9 @@ def write_ivfpq_index(
         )
 
     with ThreadPoolExecutor(3) as pool:
-        for fut in [
-            pool.submit(fn) for fn in (_w_codes, _w_centroids, _w_codebooks)
-        ]:
+        for fut in as_completed(
+            [pool.submit(fn) for fn in (_w_codes, _w_centroids, _w_codebooks)]
+        ):
             fut.result()
 
 

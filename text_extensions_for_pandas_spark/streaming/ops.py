@@ -699,7 +699,7 @@ def streaming_prep_ingest(
     **Exactly-once under foreachBatch's at-least-once replay**: every
     write — the output and all three state tables — lands in a
     ``batch=<id>`` subdirectory with ``mode("overwrite")``, and every
-    read filters to ``batch < <id>``, so a replayed batch sees exactly
+    read takes only ``batch < <id>``, so a replayed batch sees exactly
     the pre-batch state and rewrites exactly its own outputs.  State:
     ``{state_dir}/para_index`` and ``{state_dir}/text_index`` (hash
     deltas, O(batch) maintenance) and ``{state_dir}/shard_totals``
@@ -707,15 +707,30 @@ def streaming_prep_ingest(
     the offset, so reads stay O(n_shards) rows however long the ingest
     runs; compact old batch directories periodically).  Returns the
     writer — call ``.start()`` at the ingest site.
+
+    Per micro-batch, the plan materializes two frames and reads the
+    batch once (twice with ``url_col``, whose stage materializes its own
+    survivors):
+
+    1. the KEPT PARAGRAPH rows — line rows anti-joined against the
+       boilerplate table on ``(group, line_hash)`` and rebuilt per
+       ``(doc, group)``, gated, split into paragraphs, anti-joined
+       against the paragraph index, first occurrence per hash.  The
+       paragraph-index delta is this frame's hashes;
+    2. the FINAL rows — documents rebuilt from (1), exact-deduped,
+       sharded and offset.  The output, the text-index delta and the new
+       shard totals (``max(pos)`` per shard over these rows and the
+       prior totals) are all written from it.
+
+    State is read by explicit path with a declared schema — the newest
+    compaction snapshot plus the deltas above it, and the newest prior
+    ``shard_totals`` directory from the same listing — so reading state
+    launches no schema-inference or probe job.
     """
-    from pyspark.errors import AnalysisException
     from pyspark.sql import Window
 
     from text_extensions_for_pandas_spark.functions.text import gopher_rules
-    from text_extensions_for_pandas_spark.operators.dedup import (
-        dedup_paragraphs_incremental,
-        remove_boilerplate,
-    )
+    from text_extensions_for_pandas_spark.operators.dedup import _rebuild_text
     from text_extensions_for_pandas_spark.operators.sampling import (
         deterministic_shuffle,
     )
@@ -732,151 +747,141 @@ def streaming_prep_ingest(
         {"required_words": required_words} if required_words is not None else {}
     )
 
-    def _read_prior(spark, path, batch_id):
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException:
-            return None
-        return df.filter(F.col("batch") < batch_id)
-
-    def _read_prior_hashes(spark, path, batch_id):
+    def _read_prior_hashes(spark, path, col, batch_id):
         # hash indexes are read by EXPLICIT paths (newest snapshot + the
         # deltas above its horizon and below this batch) rather than
         # partition discovery, so :func:`prep_state_compact` can fold old
         # deltas into a ``compact_through=<T>`` snapshot without breaking
         # the layout; the snapshot's rows are all from batches < batch_id
-        # because compaction never folds the newest landed batch.
+        # because compaction never folds the newest landed batch.  The
+        # declared schema spares a footer-inference job per read.
         _, _, batches, compacts = _cms_index_state(spark, path)
         t = compacts[-1] if compacts else -1
         paths = [f"{path}/compact_through={t}"] if t >= 0 else []
         paths += [f"{path}/batch={b}" for b in batches if t < b < batch_id]
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return spark.read.schema(f"{col} string").parquet(*paths)
+
+    def _split(df, piece):
+        return df.select(
+            doc_col,
+            group_col,
+            F.posexplode(F.split(F.col(text_col), sep_regex)).alias("pos", piece),
+        ).filter(F.length(piece) > 0)
+
+    def _first_per(df, key, *order):
+        w = Window.partitionBy(key).orderBy(*order)
+        return (
+            df.withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") == 1)
+            .drop("__rk")
+        )
 
     def _process(batch_df, batch_id):
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
         if url_col is not None:
             u_raw = F.col(url_col)
             missing = u_raw.isNull() | (F.trim(u_raw) == "")
             keyed = batch_df.filter(~missing).withColumn(
                 "__uh", F.md5(normalize_url(url_col))
             )
-            uindex = _read_prior_hashes(spark, url_index, batch_id)
+            uindex = _read_prior_hashes(spark, url_index, "__uh", batch_id)
             if uindex is not None:
                 keyed = keyed.join(uindex, "__uh", "left_anti")
-            wu = Window.partitionBy("__uh").orderBy(doc_col)
             # materialize ONCE: the index-delta write below and the
             # downstream union both consume this plan — without the
             # checkpoint each would re-execute the anti-join + window
-            keyed = (
-                keyed.withColumn("__urk", F.row_number().over(wu))
-                .filter(F.col("__urk") == 1)
-                .drop("__urk")
-                .localCheckpoint()
-            )
-            keyed.select("__uh").distinct().write.mode("overwrite").parquet(
+            keyed = _first_per(keyed, "__uh", doc_col).localCheckpoint()
+            keyed.select("__uh").write.mode("overwrite").parquet(
                 f"{url_index}/batch={batch_id}"
             )
             batch_df = keyed.drop("__uh").unionByName(
                 batch_df.filter(missing)
             )
-        meta = batch_df.select(doc_col, group_col)
 
-        cleaned = (
-            remove_boilerplate(
-                batch_df,
-                boilerplate=boilerplate,
-                sep_regex=sep_regex,
-                join_sep=join_sep,
-                text_col=text_col,
-                doc_col=doc_col,
-                group_col=group_col,
+        # boilerplate removal: drop the boilerplate line rows, rebuild
+        # each document from the rest (a document left empty has no rows
+        # and so drops; so does a row without an id, which no document
+        # can be rebuilt under)
+        keys = [group_col, "line_hash"]
+        lines = (
+            _split(batch_df.filter(F.col(doc_col).isNotNull()), "__line")
+            .withColumn("line_hash", F.md5("__line"))
+            .join(boilerplate.select(*keys), keys, "left_anti")
+        )
+        gated = (
+            lines.groupBy(doc_col, group_col)
+            .agg(_rebuild_text("__line", join_sep).alias(text_col))
+            .filter(
+                gopher_rules(text_col, min_words=min_words, **gopher_kwargs)[
+                    "passes"
+                ]
             )
-            .join(meta, doc_col)
-            .filter(F.length("clean_text") > 0)
-            .select(doc_col, group_col, F.col("clean_text").alias(text_col))
         )
-        gated = cleaned.filter(
-            gopher_rules(text_col, min_words=min_words, **gopher_kwargs)["passes"]
-        ).localCheckpoint()  # both dedup outputs derive from here: run once
 
-        prior_paras = _read_prior_hashes(spark, para_index, batch_id)
-        rebuilt, new_hashes = dedup_paragraphs_incremental(
-            gated.select(doc_col, text_col),
-            prior_paras.select("para_hash") if prior_paras is not None else None,
-            sep_regex,
-            join_sep,
-            text_col,
-            doc_col,
+        # CCNet paragraph dedup: a paragraph survives iff its hash is not
+        # in the index and it is the batch's first (doc, pos) with it
+        paras = _split(gated, "__para").withColumn("para_hash", F.md5("__para"))
+        prior_paras = _read_prior_hashes(spark, para_index, "para_hash", batch_id)
+        if prior_paras is not None:
+            paras = paras.join(prior_paras, "para_hash", "left_anti")
+        kept = _first_per(paras, "para_hash", doc_col, "pos").localCheckpoint()
+
+        # exact dedup of the rebuilt documents against the text index
+        hashed = (
+            kept.groupBy(doc_col, group_col)
+            .agg(_rebuild_text("__para", join_sep).alias(text_col))
+            .withColumn("__th", F.md5(F.col(text_col)))
         )
-        paras = (
-            rebuilt.filter(F.length("dedup_text") > 0)
-            .select(doc_col, F.col("dedup_text").alias(text_col))
-            .join(gated.select(doc_col, group_col), doc_col)
-        )
-        hashed = paras.withColumn("__th", F.md5(F.col(text_col)))
-        tindex = _read_prior_hashes(spark, text_index, batch_id)
+        tindex = _read_prior_hashes(spark, text_index, "text_hash", batch_id)
         if tindex is not None:
             hashed = hashed.join(
                 tindex, hashed["__th"] == tindex["text_hash"], "left_anti"
             )
-        w = Window.partitionBy("__th").orderBy(doc_col)
-        exact = (
-            hashed.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-            .withColumn("n_chars", F.length(text_col).cast("long"))
+        exact = _first_per(hashed, "__th", doc_col).withColumn(
+            "n_chars", F.length(text_col).cast("long")
         )
 
         sharded = deterministic_shuffle(
             exact, n_shards=n_shards, key_col=doc_col, salt=salt
         )
-        prior_totals = _read_prior(spark, shard_totals, batch_id)
-        if prior_totals is not None:
-            latest = prior_totals.agg(F.max("batch").alias("__b")).first()["__b"]
-            offsets = (
-                prior_totals.filter(F.col("batch") == latest)
-                .select("shard", F.col("n").alias("__off"))
-                if latest is not None
-                else None
+        _, _, landed, _ = _cms_index_state(spark, shard_totals)
+        prior = [b for b in landed if b < batch_id]
+        if prior:
+            offsets = spark.read.schema("shard int, n long").parquet(
+                f"{shard_totals}/batch={prior[-1]}"
             )
+            sharded = sharded.join(
+                F.broadcast(offsets.withColumnRenamed("n", "__off")),
+                "shard",
+                "left",
+            ).withColumn("pos", F.col("pos") + F.coalesce("__off", F.lit(0)))
         else:
-            offsets = None
-        if offsets is not None:
-            sharded = sharded.join(F.broadcast(offsets), "shard", "left")
-        else:
-            sharded = sharded.withColumn("__off", F.lit(None).cast("long"))
-        final = sharded.withColumn(
-            "pos", (F.col("pos") + F.coalesce("__off", F.lit(0))).cast("long")
-        ).localCheckpoint()
+            offsets = spark.range(n_shards).select(
+                F.col("id").cast("int").alias("shard"),
+                F.lit(0).cast("long").alias("n"),
+            )
+        final = sharded.localCheckpoint()
 
-        # idempotent writes: per-batch directories, overwritten on replay
+        # idempotent writes: per-batch directories, overwritten on replay.
+        # Each hash is already unique in its frame (first per hash above)
         final.select(
             "shard", "pos", doc_col, group_col, "n_chars", text_col
         ).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-        new_hashes.write.mode("overwrite").parquet(
+        kept.select("para_hash").write.mode("overwrite").parquet(
             f"{para_index}/batch={batch_id}"
         )
-        final.select(F.col("__th").alias("text_hash")).distinct().write.mode(
+        final.select(F.col("__th").alias("text_hash")).write.mode(
             "overwrite"
         ).parquet(f"{text_index}/batch={batch_id}")
-        batch_counts = final.groupBy("shard").agg(F.count("*").alias("__bn"))
-        base = (
-            offsets
-            if offsets is not None
-            else spark.range(n_shards).select(
-                F.col("id").cast("int").alias("shard"),
-                F.lit(0).cast("long").alias("__off"),
-            )
-        )
+        # positions are dense per shard, so the highest is the running
+        # count; a shard without rows this batch keeps its prior total
         totals = (
-            base.join(batch_counts, "shard", "left")
-            .select(
-                "shard",
-                (F.col("__off") + F.coalesce("__bn", F.lit(0))).cast("long").alias("n"),
-            )
+            final.select("shard", F.col("pos").alias("n"))
+            .unionByName(offsets)
+            .groupBy("shard")
+            .agg(F.max("n").alias("n"))
         )
         totals.write.mode("overwrite").parquet(f"{shard_totals}/batch={batch_id}")
 
