@@ -202,6 +202,11 @@ def random_corpus(spark):
     ).cache()
 
 
+def _match_key(r):
+    return (r.doc_id, r.token_span.begin_token, r.token_span.end_token,
+            r.span.begin, r.span.end, r.entry_id)
+
+
 def test_dict_extractors_agree(spark, random_corpus):
     """extract_dict (join+groupBy), extract_dict_rowwise (HOF+join) and the
     literal-dictionary variant must produce identical match sets."""
@@ -216,11 +221,71 @@ def test_dict_extractors_agree(spark, random_corpus):
 
     entries = ["table scan", "scan", "sort merge", "spark", "the row"]
     d = create_dict(spark, entries)
-    key = lambda r: (r.doc_id, r.span.begin, r.span.end, r.entry_id)  # noqa: E731
-    a = {key(r) for r in extract_dict(
+    a = {_match_key(r) for r in extract_dict(
         tokenize_whitespace(random_corpus), d).collect()}
-    b = {key(r) for r in extract_dict_rowwise(random_corpus, d).collect()}
+    b = {_match_key(r) for r in extract_dict_rowwise(random_corpus, d).collect()}
     assert a == b and len(a) > 0
+
+
+HOSTILE_TEXTS = [
+    "",
+    None,
+    "   ",
+    " \t\r\n ",
+    "stream  stream\t\tstream",
+    "stream\r\nstream\r\n\r\nline break",
+    "  stream stream  ",
+    "STREAM Stream sTrEaM",
+    "İstanbul i̇stanbul İSTANBUL",
+    "x😀x stream 😀 line break 😀",
+    " ".join(["stream"] * 3),
+    "word " * 1000 + "stream stream " + "\t" * 7 + "line break",
+]
+HOSTILE_ENTRIES = ["stream", "stream stream", "line break", "İstanbul", "😀"]
+
+
+@pytest.fixture(scope="module")
+def hostile_corpus(spark):
+    """Empty, NULL and whitespace-only texts, whitespace runs with tabs and
+    CRLF, leading/trailing spaces, mixed case, a dotted capital I (whose
+    lowercase is two code points), non-BMP characters, a long document, and
+    an entry that overlaps itself."""
+    return spark.createDataFrame(
+        list(enumerate(HOSTILE_TEXTS)), "doc_id long, text string"
+    ).cache()
+
+
+def test_dict_extractors_agree_on_hostile_text(spark, hostile_corpus):
+    from text_extensions_for_pandas_spark.functions.text import (
+        tokenize_whitespace,
+    )
+    from text_extensions_for_pandas_spark.operators.consolidate import consolidate
+    from text_extensions_for_pandas_spark.operators.extract import (
+        create_dict,
+        extract_dict,
+        extract_dict_consolidated_rowwise,
+        extract_dict_rowwise,
+    )
+
+    d = create_dict(spark, HOSTILE_ENTRIES)
+    batch = extract_dict(tokenize_whitespace(hostile_corpus), d)
+    want = {_match_key(r) for r in batch.collect()}
+    got = {_match_key(r) for r in extract_dict_rowwise(hostile_corpus, d).collect()}
+    assert got == want
+    # every entry, and a match that overlaps another of the same entry
+    assert {k[-1] for k in want} == set(range(len(HOSTILE_ENTRIES)))
+    assert (4, 0, 2, 0, 14, 1) in want and (4, 1, 3, 8, 22, 1) in want
+    for doc_id, _, _, b, e, eid in want:
+        covered = HOSTILE_TEXTS[doc_id][b:e]
+        assert " ".join(covered.lower().split()) == HOSTILE_ENTRIES[eid].lower()
+
+    spans = lambda rows: {  # noqa: E731
+        (r.doc_id, r.span.begin, r.span.end, r.entry_id) for r in rows
+    }
+    consolidated = consolidate(batch.select("doc_id", "span", "entry_id"), on="span")
+    assert spans(
+        extract_dict_consolidated_rowwise(hostile_corpus, HOSTILE_ENTRIES).collect()
+    ) == spans(consolidated.collect())
 
 
 def test_consolidated_rowwise_matches_batch_pipeline(spark, random_corpus):

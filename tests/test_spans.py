@@ -110,3 +110,59 @@ def test_context(spark):
     docs = spark.createDataFrame([(0, TEXT, 10, 14)], "doc_id long, text string, b int, e int")
     r = docs.select(S.context("text", S.make_span("b", "e"), 3).alias("c")).collect()[0]
     assert (r.c.begin, r.c.end) == (7, 15)  # clipped to len(text)==15
+
+
+def test_same_doc(spark):
+    # reference same_target_text: a mask of "same target text"; here the
+    # target text is the doc_id, and a NULL doc (an NA span's) matches none
+    df = spark.createDataFrame(
+        [(0, 0), (0, 1), (None, 0), (None, None)], "d1 long, d2 long"
+    )
+    got = [r[0] for r in df.select(S.same_doc("d1", "d2")).collect()]
+    assert got == [True, False, None, None]
+    assert df.filter(S.same_doc("d1", "d2")).count() == 1
+
+
+def test_merge_token_spans(spark):
+    # reference TokenSpan.__add__: the minimal token span covering both,
+    # in token offsets; the NA span is ignored, as by covering_span
+    cases = [((0, 2), (5, 7), (0, 7)), ((5, 7), (0, 2), (0, 7)),
+             ((1, 6), (2, 3), (1, 6)), ((3, 3), (3, 5), (3, 5))]
+    df = spark.createDataFrame(
+        [(a, b) for a, b, _ in cases],
+        f"a {S.TOKEN_SPAN_DDL}, b {S.TOKEN_SPAN_DDL}",
+    )
+    got = [tuple(r[0]) for r in df.select(S.merge_token_spans("a", "b")).collect()]
+    assert got == [m for _, _, m in cases]
+    na = df.select(S.merge_token_spans(
+        "a", F.lit(None).cast(S.TOKEN_SPAN_DDL))).collect()
+    assert [tuple(r[0]) for r in na] == [a for a, _, _ in cases]
+
+
+def test_as_tuple_cols(span_df):
+    # reference as_frame/as_tuples: flat begin/end columns per span; the NA
+    # span, (-1, -1) in the reference, is a NULL struct here, so both NULL
+    got = sorted(tuple(r) for r in span_df.select(*S.as_tuple_cols("span", "s_")).collect())
+    assert got == [(0, 4), (5, 7), (8, 9), (10, 14), (14, 15)]
+    assert span_df.select(*S.as_tuple_cols("span", "s_")).columns == ["s_begin", "s_end"]
+    na = span_df.limit(1).select(*S.as_tuple_cols(S.null_span())).collect()[0]
+    assert tuple(na) == (None, None)
+
+
+def test_token_span_to_char_span(spark):
+    # reference token_span.py:155-162: begin = tokens.begin[begin_token],
+    # end = tokens.end[end_token - 1], or begin when zero-length; an NA token
+    # span derives the NA char span
+    tokens = spark.createDataFrame(
+        [(0, i, (b, e)) for i, (b, e) in enumerate(
+            [(0, 4), (5, 7), (8, 9), (10, 14), (14, 15)])],
+        f"doc_id long, token_idx int, span {S.SPAN_DDL}",
+    )
+    ts = spark.createDataFrame(
+        [(0, 0, (0, 1)), (1, 0, (1, 4)), (2, 0, (2, 2)), (3, 0, (0, 5)), (4, 0, None)],
+        f"k int, doc_id long, token_span {S.TOKEN_SPAN_DDL}",
+    )
+    got = {r.k: r.span for r in S.token_span_to_char_span(ts, tokens).collect()}
+    assert {k: tuple(v) for k, v in got.items() if k != 4} == {
+        0: (0, 4), 1: (5, 14), 2: (8, 8), 3: (0, 15)}
+    assert got[4] is None

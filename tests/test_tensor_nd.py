@@ -84,3 +84,24 @@ def test_flatten_and_isna_nd(spark):
     # rank=1 degenerates to the 1-D behavior
     df1 = spark.createDataFrame([([nan, 1.0],)], "x array<double>")
     assert _one(df1, tensor_isna_nd("x", rank=1)) is False
+
+
+def test_tensor_isna_and_min_max_match_numpy(spark):
+    # reference TensorArray.isna: np.all(np.isnan(t), axis=-1), so the
+    # all-NaN row (and the empty one) is NA and a partly-NaN row is not;
+    # vmin/vmax are the row's np.min/np.max
+    from text_extensions_for_pandas_spark.functions.tensor import (
+        tensor_isna,
+        vmax,
+        vmin,
+    )
+
+    nan = float("nan")
+    rows = [[nan, nan, nan], [nan, 2.0], [1.5, -3.0, 0.25], [], [7.0]]
+    df = spark.createDataFrame([(r,) for r in rows], "t array<double>")
+    got = [r[0] for r in df.select(tensor_isna("t")).collect()]
+    assert got == [bool(np.all(np.isnan(np.array(r)))) for r in rows]
+    finite = [r for r in rows if r and not np.isnan(r).any()]
+    dff = spark.createDataFrame([(r,) for r in finite], "t array<double>")
+    got = [tuple(r) for r in dff.select(vmin("t"), vmax("t")).collect()]
+    assert got == [(float(np.min(r)), float(np.max(r))) for r in finite]

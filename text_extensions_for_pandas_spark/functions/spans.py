@@ -194,7 +194,8 @@ def token_span_to_char_span(
 
     ``begin = tokens.begin[begin_token]``; ``end = tokens.end[end_token-1]``
     or ``begin`` when zero-length (reference ``array/token_span.py:155-162``,
-    array form ``array/token_span.py:859-892``).
+    array form ``array/token_span.py:859-892``); the NA token span gives the
+    NA span.
 
     Two equijoins on ``(doc_id, token_idx)`` — both sides already partitioned
     by doc, and Catalyst broadcasts whichever side is small.
@@ -225,7 +226,8 @@ def token_span_to_char_span(
         )
         .withColumn(
             out_col,
-            F.when(
+            F.when(ts.isNull(), null_span())
+            .when(
                 ts["end_token"] == ts["begin_token"],
                 make_span(F.col("__b_begin"), F.col("__b_begin")),
             ).otherwise(make_span(F.col("__b_begin"), F.col("__e_end"))),

@@ -12,7 +12,7 @@ import re
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from text_extensions_for_pandas_spark.functions.spans import make_span, make_token_span
@@ -296,34 +296,45 @@ def extract_dict(
     )
 
 
-def token_array(text_col):
-    """Whitespace token array with exact char offsets as a pure column
-    expression: ``array<struct<idx,begin,end,token>>`` — the row-local twin
-    of :func:`~text_extensions_for_pandas_spark.functions.text.tokenize_whitespace`
-    (empty segments advance the cursor but emit nothing)."""
-    segs = F.split(F.translate(text_col, "\t\n\r", "   "), " ")
-    return F.aggregate(
-        segs,
-        F.struct(
-            F.lit(0).alias("cur"),
-            F.array().cast(
-                "array<struct<idx:int,begin:int,end:int,token:string>>"
-            ).alias("toks"),
-        ),
-        lambda acc, seg: F.struct(
-            (acc["cur"] + F.length(seg) + 1).alias("cur"),
-            F.when(F.length(seg) > 0, F.array_append(
-                acc["toks"],
-                F.struct(
-                    F.size(acc["toks"]).alias("idx"),
-                    acc["cur"].cast("int").alias("begin"),
-                    (acc["cur"] + F.length(seg)).cast("int").alias("end"),
-                    seg.alias("token"),
-                ),
-            )).otherwise(acc["toks"]).alias("toks"),
-        ),
-        lambda acc: acc["toks"],
+def _doc_tokens(documents: DataFrame, text_col: str, doc_col: str) -> DataFrame:
+    """``(doc_col, __t, __segs, __k, __lt)``: each document's whitespace
+    tokens as native arrays — the row-local twin of
+    :func:`~text_extensions_for_pandas_spark.functions.text.tokenize_whitespace`.
+    ``__t`` is the text with tabs and newlines mapped to spaces, so every
+    separator is one character; ``__segs`` is its single-space split, empty
+    segments kept; ``__k`` holds each token's segment index and ``__lt``
+    each token lowercased.  Each array is its own column, so no lambda
+    re-runs the split per element."""
+    segs = F.col("__segs")
+    return (
+        documents.select(
+            F.col(doc_col), F.translate(F.col(text_col), "\t\n\r", "   ").alias("__t")
+        )
+        .withColumn("__segs", F.split("__t", " "))
+        .withColumn(
+            "__k", F.filter(F.sequence(F.lit(0), F.size(segs) - 1), lambda k: segs[k] != "")
+        )
+        .withColumn("__lt", F.transform("__k", lambda k: F.lower(segs[k])))
     )
+
+
+def _char_span(first: Column, last: Column) -> Column:
+    """The char span of tokens ``first`` through ``last``, from the
+    :func:`_doc_tokens` columns.  The end is the length of the text up to
+    the ``k+1``-th space, ``k`` being the last token's segment; the begin is
+    the end less the match's own segments.  Finding that space scans the
+    text, so a document costs O(matches × length); called per match only."""
+    k = F.col("__k")
+    end = F.length(F.call_function("substring_index", "__t", F.lit(" "), k[last] + 1))
+    own = F.length(F.array_join(F.slice("__segs", k[first] + 1, k[last] - k[first] + 1), " "))
+    # a one-element transform evaluates the scan once for both offsets
+    return F.transform(F.array(end), lambda e: make_span(e - own, e))[0]
+
+
+def _matches_at(lt: Column, i: Column, toks: Column, n) -> Column:
+    """Whether the lowercased tokens ``lt`` hold entry ``toks`` (``n``
+    tokens) at position ``i``; the first token alone rejects most starts."""
+    return (lt[i] == toks[0]) & (F.slice(lt, i + 1, n) == toks)
 
 
 def extract_dict_consolidated_rowwise(
@@ -338,62 +349,52 @@ def extract_dict_consolidated_rowwise(
     ``consolidate`` produces the same rows; verified in tests).
 
     The dictionary rides in the plan as literals (gazetteers are small by
-    contract, reference ``spanner/extract.py:93-109``).  Output:
+    contract, reference ``spanner/extract.py:93-109``).  Per document: the
+    native token arrays of :func:`_doc_tokens`, one ``filter`` lambda per
+    entry over the candidate starts, consolidation of the matches in token
+    units (token order is char order, so the kept set is the same), and
+    char offsets for the kept matches only.  Output:
     ``(doc_id, span, entry_id)``.
     """
-    from functools import reduce as _reduce
-    from operator import and_ as _and
-
     from text_extensions_for_pandas_spark.operators.consolidate import (
         consolidate_array,
     )
 
-    toks = F.col("__toks")
+    lt = F.col("__lt")
 
     def entry_matches(parts: list[str], eid: int):
         # factory so each closure binds its own parts/eid (and the lambdas
         # keep arity 1 — pyspark inspects lambda signatures)
         n = len(parts)
-
-        def pred(i):
-            return _reduce(
-                _and,
-                [
-                    F.lower(F.element_at(toks, i + j + 1)["token"])
-                    == F.lit(parts[j])
-                    for j in range(n)
-                ],
-            )
-
-        def to_match(i):
-            return F.struct(
-                F.element_at(toks, i + 1)["begin"].alias("begin"),
-                F.element_at(toks, i + n)["end"].alias("end"),
-                F.lit(eid).alias("entry_id"),
-            )
-
+        toks = F.array(*map(F.lit, parts))
         starts = F.when(
-            F.size(toks) >= n,
-            F.filter(F.sequence(F.lit(0), F.size(toks) - n), pred),
+            F.size(lt) >= n,
+            F.filter(
+                F.sequence(F.lit(0), F.size(lt) - n),
+                lambda i: _matches_at(lt, i, toks, n),
+            ),
         ).otherwise(F.array().cast("array<int>"))
-        return F.transform(starts, to_match)
+        return F.transform(
+            starts,
+            lambda i: F.struct(
+                i.alias("begin"), (i + n).alias("end"), F.lit(eid).alias("entry_id")
+            ),
+        )
 
-    per_entry = [
-        entry_matches(entry.lower().split(), eid)
-        for eid, entry in enumerate(entries)
-    ]
-    matches = F.flatten(F.array(*per_entry))
+    matches = F.flatten(
+        F.array(*[entry_matches(e.lower().split(), eid) for eid, e in enumerate(entries)])
+    )
     kept = consolidate_array(
         matches, element_type="struct<begin:int,end:int,entry_id:int>"
     )
-    return (
-        documents.withColumn("__toks", token_array(F.col(text_col)))
-        .select(F.col(doc_col), F.explode(kept).alias("__m"))
-        .select(
-            doc_col,
-            make_span(F.col("__m.begin"), F.col("__m.end")).alias("span"),
-            F.col("__m.entry_id").alias("entry_id"),
-        )
+    spans = F.transform(
+        kept,
+        lambda m: F.struct(
+            _char_span(m["begin"], m["end"] - 1).alias("span"), m["entry_id"].alias("entry_id")
+        ),
+    )
+    return _doc_tokens(documents, text_col, doc_col).select(
+        F.col(doc_col), F.inline(spans)
     )
 
 
@@ -406,51 +407,38 @@ def extract_dict_rowwise(
     """Gazetteer matching computed entirely *within each document row* —
     no explode-to-token-rows, no window, no aggregation.
 
-    Per row: build the token array (offsets via an ``aggregate`` fold), join
-    the (broadcast) dictionary, and test every candidate start position with
-    nested higher-order functions.  Because the plan is stateless row logic
-    + a broadcast join, it runs unchanged on Structured Streaming (where
-    :func:`extract_dict`'s groupBy would need a watermark) and on 100 TB
-    batch scans it trades :func:`extract_dict`'s shuffle for per-row compute
-    — the better plan when dictionaries are small and documents are short.
+    Per row: split the text into the native token arrays of
+    :func:`_doc_tokens`, join the (broadcast) dictionary on
+    ``size(tokens) >= n_toks``, keep each candidate start with one
+    ``filter`` lambda (first token, then the sliced run against the entry),
+    and compute char offsets only for the matched starts.  Because the plan
+    is stateless row logic + a broadcast join, it runs unchanged on
+    Structured Streaming (where :func:`extract_dict`'s groupBy would need a
+    watermark) and on 100 TB batch scans it trades :func:`extract_dict`'s
+    shuffle for per-row compute — the better plan when dictionaries are
+    small and documents are short.
 
     Same output contract as :func:`extract_dict`:
     ``(doc_id, token_span, span, entry_id)``.
     """
-    docs = documents.select(
-        F.col(doc_col), token_array(F.col(text_col)).alias("__toks")
-    )
-    with_dict = docs.join(
+    with_dict = _doc_tokens(documents, text_col, doc_col).join(
         F.broadcast(dictionary.select("entry_id", "toks", "n_toks")),
-        F.size("__toks") >= F.col("n_toks"),
+        F.size("__lt") >= F.col("n_toks"),
         "inner",
     )
+    lt, n = F.col("__lt"), F.col("n_toks")
     starts = F.filter(
-        F.sequence(F.lit(0), F.size("__toks") - F.col("n_toks")),
-        lambda i: F.forall(
-            F.sequence(F.lit(0), F.col("n_toks") - 1),
-            lambda j: F.lower(F.element_at(F.col("__toks"), i + j + 1)["token"])
-            == F.element_at(F.col("toks"), j + 1),
+        F.sequence(F.lit(0), F.size(lt) - n),
+        lambda i: _matches_at(lt, i, F.col("toks"), n),
+    )
+    spans = F.transform(
+        starts,
+        lambda i: F.struct(
+            make_token_span(i, i + n).alias("token_span"),
+            _char_span(i, i + n - 1).alias("span"),
         ),
     )
-    matched = with_dict.select(
-        F.col(doc_col),
-        "entry_id",
-        "n_toks",
-        "__toks",
-        F.explode(starts).alias("__start"),
-    )
-    return matched.select(
-        F.col(doc_col),
-        make_token_span(
-            F.col("__start"), F.col("__start") + F.col("n_toks")
-        ).alias("token_span"),
-        make_span(
-            F.element_at(F.col("__toks"), F.col("__start") + 1)["begin"],
-            F.element_at(F.col("__toks"), F.col("__start") + F.col("n_toks"))["end"],
-        ).alias("span"),
-        F.col("entry_id"),
-    )
+    return with_dict.select(F.col(doc_col), F.inline(spans), "entry_id")
 
 
 def extract_split(

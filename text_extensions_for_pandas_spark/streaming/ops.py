@@ -258,7 +258,10 @@ def streaming_extract_dict(documents: DataFrame, dictionary: DataFrame) -> DataF
     matcher: the batch ``extract_dict`` aggregates match positions across
     token rows (a groupBy — needs a watermark on a stream), while
     ``extract_dict_rowwise`` is stateless per-document logic + a broadcast
-    stream-static join, which streams without state."""
+    stream-static join, which streams without state.  Per document it
+    splits the text into native token arrays, tests each dictionary
+    entry's candidate starts with one ``filter`` lambda, and computes char
+    offsets only for the matches."""
     from text_extensions_for_pandas_spark.operators.extract import (
         extract_dict_rowwise,
     )
@@ -361,8 +364,10 @@ def streaming_extract_consolidated(
 ) -> DataFrame:
     """Gazetteer extract + left-to-right consolidate on a document stream —
     the whole spanner pipeline as stateless per-row column logic
-    (``extract_dict_consolidated_rowwise``), so it runs identically on
-    batch and stream with no watermark and no state store."""
+    (``extract_dict_consolidated_rowwise``: native token arrays, one
+    ``filter`` lambda per entry, consolidation in token units, char offsets
+    for the kept matches only), so it runs identically on batch and stream
+    with no watermark and no state store."""
     from text_extensions_for_pandas_spark.operators.extract import (
         extract_dict_consolidated_rowwise,
     )
