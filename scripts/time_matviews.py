@@ -26,7 +26,7 @@ def main() -> None:
 
     spark = get_spark("time_matviews")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    spark.read.parquet(f"{sf_dir}/documents.parquet").count()
 
     out: dict[str, dict] = {}
     for name, build in (

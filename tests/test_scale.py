@@ -374,3 +374,86 @@ class TestCountMinSketch:
         )
         got = {r.item: r.est for r in est.collect()}
         assert got == {"a": 2}
+
+
+# -- narrow-scan spread policy: one spread where documents enter ----------
+
+
+def _spreads(df) -> int:
+    return (
+        df._jdf.queryExecution().executedPlan().toString().count(
+            "REPARTITION_BY_NUM"
+        )
+    )
+
+
+def test_load_wide_spreads_single_file_scan_once(spark):
+    import re
+
+    from text_extensions_for_pandas_spark.queries import load, load_wide
+
+    assert load(spark, SF_DIR, "documents").rdd.getNumPartitions() == 1
+    wide = load_wide(spark, SF_DIR)
+    assert _spreads(wide) == 1
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = max(n, spark.sparkContext.defaultParallelism)
+    spread = rf"hashpartitioning\(doc_id#\d+L?, {n}\), REPARTITION_BY_NUM"
+    assert re.search(spread, plan), plan
+
+
+def test_widen_narrow_input_keeps_parallel_frame(spark):
+    from text_extensions_for_pandas_spark.operators.scale import (
+        widen_narrow_input,
+    )
+
+    df = spark.range(0, 100, numPartitions=spark.sparkContext.defaultParallelism)
+    assert widen_narrow_input(df, by=["id"]) is df
+
+
+def _seven_operators():
+    from text_extensions_for_pandas_spark.operators import dedup as D
+    from text_extensions_for_pandas_spark.operators import pipeline as P
+
+    return {
+        "doc_shingles": D.doc_shingles,
+        "simhash": D.simhash,
+        "repeated_ngram_spans": lambda d: D.repeated_ngram_spans(d, k=20),
+        "remove_repeated_substrings": lambda d: D.remove_repeated_substrings(
+            d, k=20
+        ),
+        "fingerprint_overlap_pairs": D.fingerprint_overlap_pairs,
+        "prepare_training_corpus": P.prepare_training_corpus,
+        "corpus_funnel": P.corpus_funnel,
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_seven_operators()))
+def test_operator_takes_input_partitioning_as_given(spark, monkeypatch, op):
+    """An operator handed a derived frame (here: documents joined to an
+    aggregate of themselves) neither plans it at definition time — under
+    AQE, probing its partition count runs the aggregate's shuffle — nor
+    adds a spread of its own.
+
+    The near-dup stage of the two pipeline operators cuts lineage on its
+    id and pair lists, and a cut materializes by design (even a lazy
+    ``localCheckpoint`` executes its AQE plan).  That is a separate,
+    documented policy, so the cuts are made pass-through here: the job
+    count then sees only what the operator does to its input."""
+    from text_extensions_for_pandas_spark.operators import dedup as D
+    from text_extensions_for_pandas_spark.operators import pipeline as P
+
+    for mod in (D, P):
+        monkeypatch.setattr(mod, "cut_lineage", lambda df, eager=False: df)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    derived = docs.join(docs.groupBy("lang").count(), "lang")
+    sc = spark.sparkContext
+    group = f"spread-policy-{op}"
+    sc.setJobGroup(group, op)
+    try:
+        out = _seven_operators()[op](derived)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _spreads(out) == 0

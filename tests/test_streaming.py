@@ -506,6 +506,10 @@ def test_streaming_incremental_dedup(spark, tmp_path):
         checkpoint=str(tmp_path / "ckpt"),
     ).start()
     q.awaitTermination(180)
+    # job budget: each micro-batch keeps its source's partitioning — no
+    # operator probes or spreads the batch frame before its own work
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 32
 
     out = spark.read.parquet(str(tmp_path / "out"))
     kept = {r.doc_id for r in out.select("doc_id").collect()}

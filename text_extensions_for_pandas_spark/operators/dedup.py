@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
-from text_extensions_for_pandas_spark.operators.scale import widen_narrow_input
 
 from text_extensions_for_pandas_spark.functions.text import (
     word_shingle_rows,
@@ -78,11 +77,6 @@ def doc_shingles(
     (doc, shingle) row.  MinHash doesn't need it — min is insensitive to
     duplicates — so candidate generation alone passes ``distinct=False`` and
     the only wide op left is the map-side-combined per-doc min."""
-    # a narrow (single-task) documents scan serializes the explode + the
-    # downstream md5 sketch compute on one core — spread it first; no-op
-    # when the scan already parallelizes (measured: the 16-hash char-mode
-    # signature pass over sf0.1 drops 9.3s -> 0.9s)
-    documents = widen_narrow_input(documents, by=[doc_col])
     if mode == "word":
         out = word_shingle_rows(documents, shingle_n, text_col, doc_col)
     elif mode == "char":
@@ -465,9 +459,6 @@ def simhash(
     codegen.)  Returns ``(doc_id, simhash)`` as a 16-hex-char string.
     """
     assert bits == 64, "only 64-bit simhash supported"
-    # single-task scans serialize the shingle md5 pass — spread first
-    # (no-op when the input is already parallel)
-    documents = widen_narrow_input(documents, by=[doc_col])
     sh = word_shingle_rows(documents, shingle_n, text_col, doc_col, out_col="__sh")
     h = F.md5("__sh")
     hashed = sh.select(
@@ -798,10 +789,6 @@ def repeated_ngram_spans(
     """
     from pyspark.sql import Window
 
-    # the gram explode + hash below runs BEFORE the first exchange: on a
-    # narrow scan it is one task doing the whole corpus's k-gram hashing —
-    # spread first (no-op when the scan already parallelizes)
-    documents = widen_narrow_input(documents, by=[doc_col])
     # the gram hash is internal (only positions are output), so use
     # xxhash64: 8-byte long keys shuffle/aggregate far cheaper than md5's
     # 32-char strings, and the DuckDB oracle can keep md5 — results are
@@ -902,9 +889,6 @@ def remove_repeated_substrings(
     """
     from pyspark.sql import Window
 
-    # same narrow-scan spread as repeated_ngram_spans: the double-keyed
-    # gram hashing below is the dominant per-task compute
-    documents = widen_narrow_input(documents, by=[doc_col])
     positions = F.when(
         F.length(text_col) >= k, F.sequence(F.lit(0), F.length(text_col) - k)
     ).otherwise(F.array().cast("array<int>"))
@@ -1337,11 +1321,6 @@ def fingerprint_overlap_pairs(
         fingerprint_rows,
     )
 
-    # the winnowing pass (an md5 per character position) runs before the
-    # first Exchange — on a narrow single-task scan it serializes the whole
-    # corpus's hashing on one core; spread first (no-op when the scan
-    # already parallelizes, i.e. always at corpus scale)
-    documents = widen_narrow_input(documents, by=[doc_col])
     fps = fingerprint_rows(documents, k, window, text_col, doc_col)
     # stop-key filter via count-over-window on the fp shuffle: the former
     # groupBy + left-semi-join evaluated ``fps`` — an md5 per character

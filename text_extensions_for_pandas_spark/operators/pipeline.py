@@ -19,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
-from text_extensions_for_pandas_spark.operators.scale import widen_narrow_input
 
 from text_extensions_for_pandas_spark.functions.text import (
     lang_id,
@@ -88,10 +87,6 @@ def prepare_training_corpus(
 
         documents = documents.withColumn(text_col, fix_text(text_col))
 
-    # the lang-ID + quality gate below is the pipeline's heaviest row-local
-    # expression and runs pre-exchange — spread a narrow (single-task) scan
-    # first; no-op when the scan already parallelizes
-    documents = widen_narrow_input(documents, by=[doc_col])
     toks = F.col("__toks")
     qualified = (
         documents.withColumn("__toks", word_tokens(F.col(text_col)))
@@ -145,10 +140,6 @@ def corpus_funnel(
     memberships), a single conditional-sum aggregate, then an unpivot —
     one corpus pass instead of one job per stage."""
     languages = languages or ["en"]
-    # same narrow-scan spread as prepare_training_corpus: the flag scan is
-    # the funnel's single most expensive pass (lang dispatch + quality
-    # metrics over every document) and runs pre-exchange
-    documents = widen_narrow_input(documents, by=[doc_col])
     toks = F.col("__toks")
     flagged = (
         documents.withColumn("__toks", word_tokens(F.col(text_col)))

@@ -75,23 +75,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_wide(
-    spark: SparkSession, sf_dir: str, name: str = "documents",
-    by: tuple = ("doc_id",),
-) -> DataFrame:
-    """``load()`` + :func:`~.operators.scale.widen_narrow_input` — for
-    queries whose per-row expression work (regex gates, HOF folds, sketch
-    hashing, result-hash evaluation) dominates: a narrow single-task scan
-    serializes all of it on one core, so spread it across the session's
-    shuffle parallelism first.  No-op whenever the scan already
-    parallelizes (i.e. at corpus scale); interleaved A/B at sf0.1 showed
-    the cheap-scan tail is a wash under an unconditional spread, so only
-    the measured per-row-heavy queries use this loader."""
+def load_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``documents`` table spread by
+    :func:`~.operators.scale.widen_narrow_input`: the loader of every
+    query whose per-row expression work (regex gates, HOF folds, sketch
+    hashing, shingle and gram explodes) dominates.  Operators never
+    repartition their input, so this is the one place the registry
+    spreads a narrow corpus.  No-op whenever the scan already
+    parallelizes (i.e. at corpus scale).  ``load()`` stays unspread:
+    interleaved A/B at sf0.1 showed about ten cheap queries losing
+    0.05-0.4 s each to an unconditional spread's extra exchange
+    (OPTIMIZATION_r11.md #8)."""
     from text_extensions_for_pandas_spark.operators.scale import (
         widen_narrow_input,
     )
 
-    return widen_narrow_input(load(spark, sf_dir, name), by=list(by))
+    return widen_narrow_input(load(spark, sf_dir, "documents"), by=["doc_id"])
 
 
 DEC = "decimal(18,2)"
@@ -183,7 +182,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-gram shingles of the documents corpus."""
     return _matview(
         spark, sf_dir, "shingles",
-        lambda: D.doc_shingles(load(spark, sf_dir, "documents")),
+        lambda: D.doc_shingles(load_wide(spark, sf_dir)),
     )
 
 
@@ -1046,7 +1045,7 @@ def q_extract_dict_rowwise(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_dict_rowwise,
     )
 
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     d = create_dict(spark, DICT_ENTRIES)
     out = extract_dict_rowwise(docs, d)
     return out.select(
@@ -1202,7 +1201,7 @@ def q_consolidate_rowwise(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_dict_consolidated_rowwise,
     )
 
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     out = extract_dict_consolidated_rowwise(docs, OVERLAP_ENTRIES)
     return out.select(
         "doc_id",
@@ -1423,7 +1422,7 @@ def q_band_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_band_index,
     )
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     existing = docs.filter(F.col("doc_id") % 3 != 0)
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     base = _session_tmp("band_index_gate")
@@ -1548,7 +1547,7 @@ FROM assigned WHERE rn = 1 GROUP BY centroid_id ORDER BY cluster_id
 
 
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_wide(spark, sf_dir, "documents").withColumn(
+    docs = load_wide(spark, sf_dir).withColumn(
         "__toks", T.word_tokens(F.col("text"))
     )
     q = T.quality_metrics(F.col("text"), toks=F.col("__toks"))
@@ -1653,7 +1652,7 @@ FROM binned GROUP BY shard, bin ORDER BY shard, bin
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     return (
         docs.withColumn("__toks", T.word_tokens(F.col("text")))
         .select(T.lang_id(F.col("text"), toks=F.col("__toks")).alias("pred_lang"))
@@ -1700,7 +1699,7 @@ def q_lang_id_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace tokens, so before the r9 script-ratio branches every
     CJK row came back 'und' — this query pins the fix.  All codegen
     regexp length arithmetic, one aggregate."""
-    docs = load_wide(spark, sf_dir, "documents").select("doc_id")
+    docs = load_wide(spark, sf_dir).select("doc_id")
     i = F.col("doc_id")
     text = (
         F.when(i % 5 == 0, F.lit("今天天气很好。我们去公园散步吧。"))
@@ -1737,14 +1736,7 @@ FROM d GROUP BY pred_lang ORDER BY pred_lang
 
 
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from text_extensions_for_pandas_spark.operators.scale import (
-        widen_narrow_input,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    # the winnowing HOF (per-row md5 of every 8-gram + min-window fold)
-    # runs pre-exchange — spread a narrow scan first (no-op when parallel)
-    docs = widen_narrow_input(docs, by=["doc_id"])
+    docs = load_wide(spark, sf_dir)
     fps = (
         T.fingerprint_rows(docs, k=8, window=4)
         .groupBy("doc_id")
@@ -2473,7 +2465,7 @@ FROM pairs WHERE cosine >= 0.3 ORDER BY vec_a, vec_b
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs with < 3 words have no shingles: excluded on both sides
-    docs = load(spark, sf_dir, "documents").filter(
+    docs = load_wide(spark, sf_dir).filter(
         F.size(T.word_tokens(F.col("text"))) >= 3
     )
     return D.simhash(docs).orderBy("doc_id")
@@ -2970,7 +2962,7 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-stage survivor counts."""
     from text_extensions_for_pandas_spark.operators.pipeline import corpus_funnel
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     return corpus_funnel(
         docs, languages=["en"], min_words=10, max_word_len=12.0,
         near_dup_threshold=0.8, shingles=_shingles(spark, sf_dir),
@@ -3655,7 +3647,7 @@ def q_gopher_rules_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuned list both branches appear and ``passes`` varies by row)."""
     from text_extensions_for_pandas_spark.functions.text import gopher_rules
 
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     g = gopher_rules(
         "text",
         min_words=30,
@@ -4306,7 +4298,7 @@ FROM ranked WHERE rk <= 20 ORDER BY vec_id
 
 
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.repetition_metrics(load_wide(spark, sf_dir, "documents"), n=2).orderBy(
+    return T.repetition_metrics(load_wide(spark, sf_dir), n=2).orderBy(
         "doc_id"
     )
 
@@ -4405,7 +4397,7 @@ def q_repeated_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup: maximal char spans of cross-document repeated
     20-grams (interval union by window islands in both engines)."""
     return D.repeated_ngram_spans(
-        load(spark, sf_dir, "documents"), k=20, min_docs=2
+        load_wide(spark, sf_dir), k=20, min_docs=2
     ).orderBy("doc_id", "begin")
 
 
@@ -4453,7 +4445,7 @@ def q_exactsubstr_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-doc cut stats.  ``repeated_substrings`` reports the
     passages; this proves the edit itself (keep-first flagging, island
     union, segment-fold rebuild) end-to-end."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     out = D.remove_repeated_substrings(docs, k=20)
     return out.select(
         "doc_id",
@@ -5537,7 +5529,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha-word / required-stopword rules and the combined pass flag."""
     from text_extensions_for_pandas_spark.functions.text import gopher_rules
 
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     return (
         docs.select("doc_id", gopher_rules("text").alias("g"))
         .select("doc_id", "g.*")
@@ -5767,7 +5759,7 @@ def q_fingerprint_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         fingerprint_overlap_pairs,
     )
 
-    docs = load(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     out = fingerprint_overlap_pairs(
         docs, k=8, window=4, min_shared=3, max_docs_per_fp=10
     )
@@ -6208,7 +6200,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_log_weights,
     )
 
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     out = dsir_log_weights(docs, docs.filter(F.col("lang") == "en"))
     return out.select(
         "doc_id",
@@ -6409,7 +6401,7 @@ def q_cjk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(t) for t in classes]),
         (F.col("doc_id") % 5 + 1).cast("int"),
     )
-    docs = load_wide(spark, sf_dir, "documents").select("doc_id", text.alias("t"))
+    docs = load_wide(spark, sf_dir).select("doc_id", text.alias("t"))
     r = cjk_quality_rules("t")
     g = quality_gate_by_script("t")
     return docs.select(
@@ -6571,16 +6563,7 @@ def q_multilingual_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(t) for t in classes]),
         (F.col("doc_id") % 16 + 1).cast("int"),
     )
-    docs = load(spark, sf_dir, "documents").select("doc_id", text.alias("t"))
-    # the per-row work below (HOF token strip + 16-language regex gate) is
-    # the heaviest row-local expression in the registry and runs before any
-    # exchange — on a narrow single-task scan it serializes on one core;
-    # spread first (no-op when the scan already parallelizes)
-    from text_extensions_for_pandas_spark.operators.scale import (
-        widen_narrow_input,
-    )
-
-    docs = widen_narrow_input(docs, by=["doc_id"])
+    docs = load_wide(spark, sf_dir).select("doc_id", text.alias("t"))
     docs = docs.withColumn("__toks", word_tokens(F.col("t")))
     # materialize the stripped tokens AND the prediction: HOF lambdas
     # don't CSE, so the 14 per-language stopword filters would each
@@ -6646,7 +6629,7 @@ def q_term_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     terms = ["customer!", "spark", "batch batch."]
-    docs = load_wide(spark, sf_dir, "documents")
+    docs = load_wide(spark, sf_dir)
     hits = F.array_distinct(blocked_term_hits("text", terms))
     return docs.select(
         "doc_id",
@@ -7875,7 +7858,7 @@ def q_near_dup_char_cjk(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_dup_pairs,
     )
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    docs = load_wide(spark, sf_dir).select("doc_id")
     i = F.col("doc_id")
     pair = (i / 2).cast("bigint")
 
@@ -8031,7 +8014,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas UDF projection: no shuffle, no collect."""
     from text_extensions_for_pandas_spark.operators.html import html_to_text
 
-    docs = load_wide(spark, sf_dir, "documents").select("doc_id")
+    docs = load_wide(spark, sf_dir).select("doc_id")
     i = F.col("doc_id").cast("string")
     x = (F.col("doc_id") * F.col("doc_id") % 101).cast("string")
     html = F.concat(
