@@ -126,6 +126,8 @@ def main() -> None:
         # strip volatile ids so regeneration diffs stay reviewable
         plan = re.sub(r"#\d+L?", "#_", plan)
         plan = re.sub(r"\[plan_id=\d+\]", "[plan_id=_]", plan)
+        plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
+        plan = re.sub(r"/\S*?/tep_session_[^/\]\s]+", "<session_tmp>", plan)
         plan = re.sub(r"(file|location).*?\[?file:[^\n\]]*\]?", r"\1: <path>", plan)
         parts.append(f"\n## {name}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:

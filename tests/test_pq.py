@@ -294,6 +294,25 @@ class TestDurableIvfPqIndex:
         for table in ("codes", "codebooks"):
             assert os.path.exists(f"{path}/{table}/_SUCCESS")
 
+    def test_writer_jobs_stay_in_callers_job_group(self, spark, tmp_path):
+        """The artifact writers run on pool threads, yet every job they
+        launch stays in the caller's job group: none runs ungrouped."""
+        from text_extensions_for_pandas_spark.operators import similarity as S
+
+        emb, centroids, codebooks = self._frames(spark)
+        sc = spark.sparkContext
+        status = sc.statusTracker()
+        ungrouped = set(status.getJobIdsForGroup(None))
+        sc.setJobGroup("ivfpq-writers", "write_ivfpq_index")
+        try:
+            S.write_ivfpq_index(emb, centroids, codebooks, str(tmp_path / "ix"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert set(status.getJobIdsForGroup(None)) - ungrouped == set()
+        # the three artifact writes at least
+        assert len(status.getJobIdsForGroup("ivfpq-writers")) >= 3
+
     def test_search_matches_in_memory_composition(self, spark, tmp_path):
         import pyspark.sql.functions as F
 

@@ -741,20 +741,19 @@ def test_boilerplate_removal_stream_batch_parity(spark, tmp_path):
     assert got == want and len(got) == docs.count()
 
 
-def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
-    """Continuous prep: two micro-batches through boilerplate removal,
-    Gopher gate, incremental paragraph dedup, incremental exact dedup,
-    and shard landing with continuing positions."""
+_NAV = "NAVBAR"
+
+
+def _prep_inputs(spark, tmp_path):
+    """Two landing files (even ids, then odd ids) for streaming_prep_ingest,
+    read one file per micro-batch, and the static boilerplate table."""
     from text_extensions_for_pandas_spark.operators.dedup import (
         boilerplate_lines,
-    )
-    from text_extensions_for_pandas_spark.streaming.ops import (
-        streaming_prep_ingest,
     )
 
     # mean word length must clear gopher's [3, 10] band
     words = " ".join(f"the data window w{i}xx" for i in range(10))
-    nav = "NAVBAR"
+    nav = _NAV
     rows = [
         # batch 1 (even ids): two docs sharing the nav line; one clean doc
         (0, "s1", f"{nav}\n{words} zero"),
@@ -793,6 +792,18 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
+    return stream, bp
+
+
+def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
+    """Continuous prep: two micro-batches through boilerplate removal,
+    Gopher gate, incremental paragraph dedup, incremental exact dedup,
+    and shard landing with continuing positions."""
+    from text_extensions_for_pandas_spark.streaming.ops import (
+        streaming_prep_ingest,
+    )
+
+    stream, bp = _prep_inputs(spark, tmp_path)
     out = str(tmp_path / "out")
     state = str(tmp_path / "state")
     q = streaming_prep_ingest(
@@ -821,7 +832,7 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
     assert 1 not in got
     assert set(got) == {0, 2, 4, 5}
     # nav line removed everywhere
-    assert all(nav not in r["text"] for r in got.values())
+    assert all(_NAV not in r["text"] for r in got.values())
     # positions are dense per shard ACROSS batches
     by_shard = {}
     for r in got.values():
@@ -875,6 +886,63 @@ def test_streaming_prep_ingest_end_to_end(spark, tmp_path):
             ],
             default=0,
         )
+
+
+def test_streaming_prep_ingest_failed_write_fails_batch_and_replay_repairs(
+    spark, tmp_path
+):
+    """The per-batch writes overlap on pool threads.  One that fails must
+    stop the query with its own error, and a restart from the same
+    checkpoint, once the cause is gone, must leave exactly the output and
+    state of a clean run (the failed batch's other writes have landed, so
+    this is the replay path)."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from text_extensions_for_pandas_spark.streaming.ops import (
+        streaming_prep_ingest,
+    )
+
+    stream, bp = _prep_inputs(spark, tmp_path)
+
+    def run(base):
+        q = streaming_prep_ingest(
+            stream,
+            bp,
+            state_dir=f"{base}/state",
+            out_path=f"{base}/out",
+            checkpoint=f"{base}/ckpt",
+            min_words=30,
+            required_words=("the", "data"),
+            n_shards=2,
+        ).start()
+        try:
+            q.awaitTermination(300)
+        except StreamingQueryException:
+            pass
+        return q.exception()
+
+    def tables(base):
+        return {
+            sub: sorted(map(tuple, spark.read.parquet(f"{base}/{sub}").collect()))
+            for sub in ("out", "state/para_index", "state/text_index",
+                        "state/shard_totals")
+        }
+
+    clean = str(tmp_path / "clean")
+    assert run(clean) is None
+    broken = str(tmp_path / "broken")
+    os.makedirs(broken)
+    # a regular file where the output directory belongs: only the output
+    # write of batch 0 fails
+    open(f"{broken}/out", "w").close()
+    err = run(broken)
+    assert err is not None and f"{broken}/out" in str(err)
+    assert os.path.isdir(f"{broken}/state/para_index/batch=0")
+    os.remove(f"{broken}/out")
+    assert run(broken) is None
+    assert tables(broken) == tables(clean)
 
 
 def test_streaming_html_extract_is_stream_transparent(spark, tmp_path):

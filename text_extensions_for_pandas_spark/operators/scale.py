@@ -17,7 +17,9 @@ skew-join splitting (enabled in ``session.get_spark``):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -121,6 +123,36 @@ def write_partitioned(
             *[F.col(c) for c in (partition_cols + sort_cols)]
         )
     out.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+
+
+@contextmanager
+def _overlapped(spark: SparkSession):
+    """Yield ``submit(fn)``, which starts ``fn`` (typically one small
+    write to its own directory) on a thread pool and returns at once, so
+    the fixed per-job latency of independent writes overlaps instead of
+    adding up.  Leaving the block waits for every submitted call, then
+    re-raises the first failure in submission order: no worker's
+    exception is lost, and no write is still running once the block is
+    left.
+
+    Each callable is wrapped with ``pyspark.inheritable_thread_target``
+    at submission: a plain pool thread starts with empty JVM local
+    properties, so its jobs would leave the caller's job group (a
+    streaming query's run id, a traced operation's group), lose its job
+    tags and description, and drop out of any per-group job trace.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    futures = []
+    # the stream has four writes per batch (five with url dedup, whose
+    # first one lands long before the last three start)
+    with ThreadPoolExecutor(4) as pool:
+        yield lambda fn: futures.append(pool.submit(wrap(fn)))
+    for fut in futures:
+        fut.result()
 
 
 def _spread_bits_16(x):

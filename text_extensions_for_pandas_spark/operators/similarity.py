@@ -917,35 +917,27 @@ def write_ivfpq_index(
     )
 
     # the three artifact tables are independent writes to disjoint
-    # directories; submitting them from a small thread pool lets the
-    # scheduler overlap their (small, driver-latency-bound) jobs instead
-    # of paying three sequential commits (guide §2.6).  Results are read
-    # in completion order, so the first writer to fail raises its own
-    # exception
-    from concurrent.futures import ThreadPoolExecutor, as_completed
+    # directories: overlapping them saves two sequential commits
+    from text_extensions_for_pandas_spark.operators.scale import _overlapped
 
-    def _w_codes() -> None:
-        joined.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            f"{path}/codes"
+    with _overlapped(embeddings.sparkSession) as submit:
+        submit(
+            lambda: joined.write.mode("overwrite")
+            .partitionBy("cluster_id")
+            .parquet(f"{path}/codes")
         )
-
-    def _w_centroids() -> None:
         # model tables are centroid/codebook-sized — one file each, not
         # one shard per shuffle partition
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/centroids"
+        submit(
+            lambda: centroids.coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path}/centroids")
         )
-
-    def _w_codebooks() -> None:
-        codebooks.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/codebooks"
+        submit(
+            lambda: codebooks.coalesce(1)
+            .write.mode("overwrite")
+            .parquet(f"{path}/codebooks")
         )
-
-    with ThreadPoolExecutor(3) as pool:
-        for fut in as_completed(
-            [pool.submit(fn) for fn in (_w_codes, _w_centroids, _w_codebooks)]
-        ):
-            fut.result()
 
 
 def append_to_ivfpq_index(

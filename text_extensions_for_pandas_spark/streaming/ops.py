@@ -727,6 +727,14 @@ def streaming_prep_ingest(
        shard totals (``max(pos)`` per shard over these rows and the
        prior totals) are all written from it.
 
+    The writes overlap on a small thread pool, in the micro-batch's job
+    group: the paragraph-index write starts as soon as (1) exists and
+    runs while (2) is planned and materialized, and the other three
+    start together once (2) exists.  The batch ends when every write has
+    landed, and fails with the first write's error if one fails.  The
+    batch-independent expressions (the Gopher gate, the rebuild
+    aggregates, the hashes) are built once per query, not per batch.
+
     State is read by explicit path with a declared schema — the newest
     compaction snapshot plus the deltas above it, and the newest prior
     ``shard_totals`` directory from the same listing — so reading state
@@ -739,7 +747,7 @@ def streaming_prep_ingest(
     from text_extensions_for_pandas_spark.operators.sampling import (
         deterministic_shuffle,
     )
-
+    from text_extensions_for_pandas_spark.operators.scale import _overlapped
     from text_extensions_for_pandas_spark.operators.urls import (
         normalize_url,
     )
@@ -768,12 +776,27 @@ def streaming_prep_ingest(
             return None
         return spark.read.schema(f"{col} string").parquet(*paths)
 
+    # built once per query, not per batch: a Column holds an unresolved
+    # expression, so every batch's plan reuses the same objects instead
+    # of rebuilding them through hundreds of py4j calls
+    splits = {
+        piece: F.posexplode(F.split(F.col(text_col), sep_regex)).alias("pos", piece)
+        for piece in ("__line", "__para")
+    }
+    line_hash = F.md5("__line")
+    para_hash = F.md5("__para")
+    text_hash = F.md5(F.col(text_col))
+    rebuilt_lines = _rebuild_text("__line", join_sep).alias(text_col)
+    rebuilt_paras = _rebuild_text("__para", join_sep).alias(text_col)
+    passes = gopher_rules(text_col, min_words=min_words, **gopher_kwargs)["passes"]
+    if url_col is not None:
+        url_hash = F.md5(normalize_url(url_col))
+        missing_url = F.col(url_col).isNull() | (F.trim(F.col(url_col)) == "")
+
     def _split(df, piece):
-        return df.select(
-            doc_col,
-            group_col,
-            F.posexplode(F.split(F.col(text_col), sep_regex)).alias("pos", piece),
-        ).filter(F.length(piece) > 0)
+        return df.select(doc_col, group_col, splits[piece]).filter(
+            F.length(piece) > 0
+        )
 
     def _first_per(df, key, *order):
         w = Window.partitionBy(key).orderBy(*order)
@@ -784,13 +807,17 @@ def streaming_prep_ingest(
         )
 
     def _process(batch_df, batch_id):
+        # every write goes to its own batch=<id> directory and overwrites
+        # it on replay, so the writes may run in any order: each starts
+        # as soon as the frame it reads exists, and the batch ends only
+        # when all of them have landed
+        with _overlapped(batch_df.sparkSession) as submit:
+            _plan_and_write(batch_df, batch_id, submit)
+
+    def _plan_and_write(batch_df, batch_id, submit):
         spark = batch_df.sparkSession
         if url_col is not None:
-            u_raw = F.col(url_col)
-            missing = u_raw.isNull() | (F.trim(u_raw) == "")
-            keyed = batch_df.filter(~missing).withColumn(
-                "__uh", F.md5(normalize_url(url_col))
-            )
+            keyed = batch_df.filter(~missing_url).withColumn("__uh", url_hash)
             uindex = _read_prior_hashes(spark, url_index, "__uh", batch_id)
             if uindex is not None:
                 keyed = keyed.join(uindex, "__uh", "left_anti")
@@ -798,11 +825,13 @@ def streaming_prep_ingest(
             # downstream union both consume this plan — without the
             # checkpoint each would re-execute the anti-join + window
             keyed = _first_per(keyed, "__uh", doc_col).localCheckpoint()
-            keyed.select("__uh").write.mode("overwrite").parquet(
-                f"{url_index}/batch={batch_id}"
+            submit(
+                lambda: keyed.select("__uh").write.mode("overwrite").parquet(
+                    f"{url_index}/batch={batch_id}"
+                )
             )
             batch_df = keyed.drop("__uh").unionByName(
-                batch_df.filter(missing)
+                batch_df.filter(missing_url)
             )
 
         # boilerplate removal: drop the boilerplate line rows, rebuild
@@ -812,32 +841,30 @@ def streaming_prep_ingest(
         keys = [group_col, "line_hash"]
         lines = (
             _split(batch_df.filter(F.col(doc_col).isNotNull()), "__line")
-            .withColumn("line_hash", F.md5("__line"))
+            .withColumn("line_hash", line_hash)
             .join(boilerplate.select(*keys), keys, "left_anti")
         )
-        gated = (
-            lines.groupBy(doc_col, group_col)
-            .agg(_rebuild_text("__line", join_sep).alias(text_col))
-            .filter(
-                gopher_rules(text_col, min_words=min_words, **gopher_kwargs)[
-                    "passes"
-                ]
-            )
-        )
+        gated = lines.groupBy(doc_col, group_col).agg(rebuilt_lines).filter(passes)
 
         # CCNet paragraph dedup: a paragraph survives iff its hash is not
         # in the index and it is the batch's first (doc, pos) with it
-        paras = _split(gated, "__para").withColumn("para_hash", F.md5("__para"))
+        paras = _split(gated, "__para").withColumn("para_hash", para_hash)
         prior_paras = _read_prior_hashes(spark, para_index, "para_hash", batch_id)
         if prior_paras is not None:
             paras = paras.join(prior_paras, "para_hash", "left_anti")
         kept = _first_per(paras, "para_hash", doc_col, "pos").localCheckpoint()
+        # each hash is already unique in its frame (first per hash)
+        submit(
+            lambda: kept.select("para_hash").write.mode("overwrite").parquet(
+                f"{para_index}/batch={batch_id}"
+            )
+        )
 
         # exact dedup of the rebuilt documents against the text index
         hashed = (
             kept.groupBy(doc_col, group_col)
-            .agg(_rebuild_text("__para", join_sep).alias(text_col))
-            .withColumn("__th", F.md5(F.col(text_col)))
+            .agg(rebuilt_paras)
+            .withColumn("__th", text_hash)
         )
         tindex = _read_prior_hashes(spark, text_index, "text_hash", batch_id)
         if tindex is not None:
@@ -869,17 +896,16 @@ def streaming_prep_ingest(
             )
         final = sharded.localCheckpoint()
 
-        # idempotent writes: per-batch directories, overwritten on replay.
-        # Each hash is already unique in its frame (first per hash above)
-        final.select(
-            "shard", "pos", doc_col, group_col, "n_chars", text_col
-        ).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
-        kept.select("para_hash").write.mode("overwrite").parquet(
-            f"{para_index}/batch={batch_id}"
+        submit(
+            lambda: final.select(
+                "shard", "pos", doc_col, group_col, "n_chars", text_col
+            ).write.mode("overwrite").parquet(f"{out_path}/batch={batch_id}")
         )
-        final.select(F.col("__th").alias("text_hash")).write.mode(
-            "overwrite"
-        ).parquet(f"{text_index}/batch={batch_id}")
+        submit(
+            lambda: final.select(F.col("__th").alias("text_hash"))
+            .write.mode("overwrite")
+            .parquet(f"{text_index}/batch={batch_id}")
+        )
         # positions are dense per shard, so the highest is the running
         # count; a shard without rows this batch keeps its prior total
         totals = (
@@ -888,7 +914,11 @@ def streaming_prep_ingest(
             .groupBy("shard")
             .agg(F.max("n").alias("n"))
         )
-        totals.write.mode("overwrite").parquet(f"{shard_totals}/batch={batch_id}")
+        submit(
+            lambda: totals.write.mode("overwrite").parquet(
+                f"{shard_totals}/batch={batch_id}"
+            )
+        )
 
     return (
         documents.writeStream.foreachBatch(_process)
