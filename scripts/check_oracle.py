@@ -3,11 +3,16 @@
 on Spark and its oracle_sql() on DuckDB over the same parquet, compare
 row-count, schema (column names), and order-insensitive values.
 
-Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+Usage: python scripts/check_oracle.py [sf_dir] [query ...] [--json PATH]
+
+``--json PATH`` also writes one record per query: ``query``, ``ok`` (true,
+false, or null for a query without an oracle), Spark ``rows``, Spark
+``seconds`` and the ``problems`` found.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 import time
 
@@ -72,6 +77,11 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]:
 
 
 def main() -> int:
+    json_path = None
+    if "--json" in sys.argv:
+        i = sys.argv.index("--json")
+        json_path = sys.argv[i + 1]
+        del sys.argv[i : i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
@@ -89,36 +99,44 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_fail = 0
+    records = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        rec = {"query": name, "ok": False, "rows": None, "seconds": None}
+        records.append(rec)
         t0 = time.time()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:200]}")
-            n_fail += 1
+            rec["problems"] = [f"spark error: {type(e).__name__}: {str(e)[:200]}"]
+            print(f"FAIL  {name}: {rec['problems'][0]}")
             continue
-        t1 = time.time()
+        rec["rows"], rec["seconds"] = len(spark_pdf), round(time.time() - t0, 3)
+        took = f"{rec['seconds']:.1f}s"
         if name not in oracles:
-            print(f"weak  {name}: rows={len(spark_pdf)} ({t1-t0:.1f}s, no oracle)")
+            rec["ok"] = None
+            print(f"weak  {name}: rows={len(spark_pdf)} ({took}, no oracle)")
             continue
         try:
             duck_pdf = con.sql(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {str(e)[:200]}")
-            n_fail += 1
+            rec["problems"] = [f"duckdb error: {type(e).__name__}: {str(e)[:200]}"]
+            print(f"FAIL  {name}: {rec['problems'][0]}")
             continue
-        problems = compare(spark_pdf, duck_pdf)
-        if problems:
-            n_fail += 1
-            print(f"FAIL  {name}: rows={len(spark_pdf)}/{len(duck_pdf)} ({t1-t0:.1f}s)")
-            for p in problems:
+        rec["problems"] = compare(spark_pdf, duck_pdf)
+        rec["ok"] = not rec["problems"]
+        if rec["problems"]:
+            print(f"FAIL  {name}: rows={len(spark_pdf)}/{len(duck_pdf)} ({took})")
+            for p in rec["problems"]:
                 print(f"      - {p}")
         else:
-            print(f"ok    {name}: rows={len(spark_pdf)} ({t1-t0:.1f}s)")
+            print(f"ok    {name}: rows={len(spark_pdf)} ({took})")
     spark.stop()
+    if json_path:
+        with open(json_path, "w") as f:
+            json.dump(records, f, indent=1)
+    n_fail = sum(r["ok"] is False for r in records)
     print("ALL OK" if n_fail == 0 else f"{n_fail} FAILURES")
     return 1 if n_fail else 0
 

@@ -457,3 +457,58 @@ def test_operator_takes_input_partitioning_as_given(spark, monkeypatch, op):
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert _spreads(out) == 0
+
+
+# the schema of every package site that builds a small table on the driver:
+# create_dict, url blocklist, LSH weights, ensemble roster, BPE vocab,
+# minhash index meta, empty cms_read
+_LOCAL_FRAME_CASES = [
+    (
+        [(0, ["new", None]), (1, None), (2, ["😀", "İ".lower(), "i̇"]), (3, [])],
+        "entry_id int, toks array<string>",
+    ),
+    ([], "entry_id int, toks array<string>"),
+    ([("Ads.Example",), (None,), ("😀.example",)], "domain string"),
+    ([(0, 1, 2, -32768), (3, 4, 5, 32767)], "t INT, p INT, d INT, w LONG"),
+    ([("m1",), ("İ",)], "model string"),
+    (
+        [("low", 5, ["l", "o", "w</w>"]), ("😀", 1, None), (None, None, [None])],
+        "word string, count bigint, symbols array<string>",
+    ),
+    (
+        [(5, 128, 8, 1 << 20)],
+        "shingle_n int, n_hashes int, rows_per_band int, n_hash_buckets int",
+    ),
+    ([], "row int, bucket long, cnt long"),
+]
+
+
+@pytest.mark.parametrize("rows,schema", _LOCAL_FRAME_CASES)
+def test_local_frame_matches_create_data_frame(spark, rows, schema):
+    from text_extensions_for_pandas_spark.session import local_frame
+
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.isLocal()
+    assert got.schema == want.schema
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+def test_dictionary_read_runs_no_python_rdd(spark):
+    """The gazetteer reaches the matcher as a local relation, not a pickled
+    ``PythonRDD`` scan that needs a Python worker on every read."""
+    from text_extensions_for_pandas_spark.queries import q_extract_dict_rowwise
+
+    out = q_extract_dict_rowwise(spark, SF_DIR)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan
+
+
+def test_get_spark_skips_call_site_capture_but_keeps_error_message(spark):
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        spark.range(1).select("no_such_col")

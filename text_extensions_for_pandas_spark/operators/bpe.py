@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from text_extensions_for_pandas_spark.session import local_frame
 
 
 def word_freq_table(
@@ -210,7 +211,8 @@ def train_bpe(
             min_pair_count,
         )
         spark = documents.sparkSession
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [
                 (r["word"], r["count"], final_syms[r["word"]])
                 for r in vocab_rows

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from text_extensions_for_pandas_spark.session import local_frame
 
 
 def _match(gold: DataFrame, predicted: DataFrame, keys: list[str]) -> DataFrame:
@@ -296,8 +297,8 @@ def create_f1_report_ensemble(
     tp = hits.groupBy("model").agg(F.count("*").alias("tp"))
     n_pred = model_outputs.groupBy("model").agg(F.count("*").alias("n_pred"))
     if models is not None:
-        roster = model_outputs.sparkSession.createDataFrame(
-            [(m,) for m in models], "model string"
+        roster = local_frame(
+            model_outputs.sparkSession, [(m,) for m in models], "model string"
         )
         n_pred = roster.join(n_pred, "model", "left").fillna(0, ["n_pred"])
     n_gold = gold.agg(F.count("*").alias("n_gold"))  # 1 row, broadcast join

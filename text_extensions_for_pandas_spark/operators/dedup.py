@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
+from text_extensions_for_pandas_spark.session import local_frame
 
 from text_extensions_for_pandas_spark.functions.text import (
     word_shingle_rows,
@@ -1438,7 +1439,8 @@ def write_band_index(
         *part_cols, F.pmod(F.xxhash64(F.col(doc_col)), F.lit(_write_salt(bands)))
     ).write.mode("overwrite").partitionBy(*part_cols).parquet(f"{path}/bands")
     spark = documents.sparkSession
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(shingle_n, n_hashes, rows_per_band, n_hash_buckets)],
         "shingle_n int, n_hashes int, rows_per_band int, "
         "n_hash_buckets int",

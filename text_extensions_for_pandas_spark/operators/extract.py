@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from text_extensions_for_pandas_spark.functions.spans import make_span, make_token_span
+from text_extensions_for_pandas_spark.session import local_frame
 
 
 def extract_regex(
@@ -206,17 +207,23 @@ def create_dict(
     and **must tokenize the same way as the corpus tokenizer**
     (reference ``spanner/extract.py:80-83``); default = whitespace split,
     matching :func:`~text_extensions_for_pandas_spark.functions.text.tokenize_whitespace`.
+
+    The dictionary is a JVM local relation
+    (:func:`~text_extensions_for_pandas_spark.session.local_frame`):
+    reading or broadcasting it runs no Python worker.
     """
     tok = tokenizer or (lambda s: s.split())
     rows = [(i, tok(e.lower())) for i, e in enumerate(entries)]
-    df = spark.createDataFrame(rows, "entry_id int, toks array<string>")
+    df = local_frame(spark, rows, "entry_id int, toks array<string>")
     return df.withColumn("n_toks", F.size("toks"))
 
 
 def load_dict(spark: SparkSession, file_name: str, tokenizer=None) -> DataFrame:
     """Read a SystemT-format dictionary file (one entry per line, ``#``
     comments) → gazetteer DataFrame (reference ``spanner/extract.py:44-66``).
-    Driver-side parse — dictionary files are small by contract."""
+    Driver-side parse — dictionary files are small by contract — into the
+    same local relation as :func:`create_dict`, so reading it runs no
+    Python worker."""
     with open(file_name) as f:
         lines = [ln.strip() for ln in f if ln.strip() and ln[0] != "#"]
     return create_dict(spark, lines, tokenizer)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
+from text_extensions_for_pandas_spark.session import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -307,8 +308,8 @@ def lsh_hyperplane_buckets(
     becomes a pruned equijoin instead of an O(n·q) scan.
     """
     spark = vectors.sparkSession
-    wdf = spark.createDataFrame(
-        _lsh_weights(n_tables, n_planes, dims), "t INT, p INT, d INT, w LONG"
+    wdf = local_frame(
+        spark, _lsh_weights(n_tables, n_planes, dims), "t INT, p INT, d INT, w LONG"
     )
     exploded = vectors.select(
         id_col, F.posexplode(vec_col).alias("d", "__v")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from text_extensions_for_pandas_spark.session import local_frame
 
 __all__ = [
     "extract_url_parts",
@@ -76,9 +77,7 @@ def filter_blocked_domains(
     """
     spark = df.sparkSession
     if not isinstance(blocked, DataFrame):
-        blocked = spark.createDataFrame(
-            [(d,) for d in blocked], "domain string"
-        )
+        blocked = local_frame(spark, [(d,) for d in blocked], "domain string")
     bl = blocked.select(F.lower(F.col("domain")).alias("__bad")).distinct()
     host = (
         F.lower(F.col(host_col))

@@ -7,8 +7,10 @@ that matter on a real cluster (AQE, shuffle partitions, Arrow batch size).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -24,6 +26,18 @@ def get_spark(
       the natural skew source for span workloads).
     * Arrow enabled for the pandas-UDF islands (tokenizers, consolidate).
     * UTC session timezone so timestamp semantics match the DuckDB oracle.
+    * PySpark's per-call call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+      every DataFrame and Column call records a Python stack.  Building the
+      three ``spans_corpus`` benchmark queries (warm, ``local[4]`` on a
+      4-core VM) took 2,700-3,200 py4j round trips and 1.7-2.1 s with it
+      on, against 860-1,300 round trips and 0.8-1.7 s with it off: about
+      half of each query's driver-side time.  The trade-off: an error
+      keeps Spark's message and plan but loses the Python ``file:line``
+      "DataFrame query context".  PySpark reads the setting once per
+      process, from the first active session that asks; to get call sites
+      back, build the session yourself with the setting ``true`` before any
+      DataFrame call.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -60,5 +74,25 @@ def get_spark(
             os.environ.get("SPARK_PERIODIC_GC", "30min"),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-built table as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, schema)`` pickles the rows into a
+    ``PythonRDD``, so every read of the frame runs a Python-worker job.
+    Built from an Arrow table under the same Spark schema, the frame is a
+    local relation: same schema and rows, and reading it stays in the JVM.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    columns = list(zip(*rows)) or [[]] * len(struct.fields)
+    table = pa.Table.from_arrays(columns, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from text_extensions_for_pandas_spark.session import local_frame
 
 EVENTS_DDL = (
     "event_id long, ts long, user_id long, event_type string, "
@@ -1007,7 +1008,7 @@ def cms_read(spark: SparkSession, index_path: str) -> DataFrame:
     paths = [f"{index_path}/compact_through={t}"] if t >= 0 else []
     paths += [f"{index_path}/batch={b}" for b in batches if b > t]
     if not paths:
-        return spark.createDataFrame([], "row int, bucket long, cnt long")
+        return local_frame(spark, [], "row int, bucket long, cnt long")
     return (
         spark.read.parquet(*paths)
         .select("row", "bucket", "cnt")
