@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 HEADLINE = [
     # marquee span-algebra ops
     "extract_dict",
+    "extract_dict_rowwise",
     "overlap_join",
     "consolidate",
     "iob_to_spans",
@@ -99,13 +100,18 @@ HEADLINE = [
 ]
 
 SF_DIR = "/root/testdata/sf0.001"
+# Pinned, so the plans do not depend on the caller's SPARK_GRAFT_CPUS:
+# exchanges print the shuffle partition count, and the narrow-scan spread
+# (``scale.widen_narrow_input``) fires below the session's core count.
+MASTER = "local[4]"
+SHUFFLE_PARTITIONS = 32
 
 
 def main() -> None:
     from text_extensions_for_pandas_spark import get_spark
     from text_extensions_for_pandas_spark.queries import REGISTRY
 
-    spark = get_spark("dump-plans")
+    spark = get_spark("dump-plans", master=MASTER, shuffle_partitions=SHUFFLE_PARTITIONS)
     spark.sparkContext.setLogLevel("ERROR")
 
     parts = [

@@ -53,6 +53,66 @@ def test_iob_to_spans(iob_tokens):
     ]
 
 
+def _iob_spans_ref(docs):
+    """Sequential IOB2 sessionization over dense token lists: a run starts
+    at ``B``, or at ``I`` after ``O`` or the document start; a NULL tag
+    neither breaks a run nor joins it; any other tag joins the run."""
+    out = set()
+    for doc_id, tags in docs.items():
+        runs, entity, prev = {}, 0, "O"
+        for idx, (iob, typ) in enumerate(tags):
+            entity += iob == "B" or (iob == "I" and prev == "O")
+            if iob is not None and iob != "O":
+                runs.setdefault(entity, []).append((idx, typ))
+            prev = iob
+        for toks in runs.values():
+            out.add((doc_id, toks[0][0], toks[-1][0] + 1, toks[0][1]))
+    return out
+
+
+def test_iob_to_spans_matches_sequential_model(spark):
+    """Dense random tag sequences with B/I/O, NULL and unknown tags and
+    NULL types: the tagged-tokens-only plan equals the sequential scan."""
+    import random
+
+    rng = random.Random(5)
+    tags = ["B", "I", "I", "O", "O", "O", None, "X"]
+    docs = {
+        d: [(rng.choice(tags), rng.choice(["PER", "ORG", None]))
+            for _ in range(rng.randint(0, 30))]
+        for d in range(300)
+    }
+    rows = [
+        (d, i, iob, typ) for d, toks in docs.items() for i, (iob, typ) in enumerate(toks)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, token_idx int, ent_iob string, ent_type string"
+    ).withColumn("span", S.make_span(F.col("token_idx") * 6, F.col("token_idx") * 6 + 5))
+    got = {
+        (r.doc_id, r.token_span.begin_token, r.token_span.end_token, r.ent_type)
+        for r in iob_to_spans(df).collect()
+    }
+    want = _iob_spans_ref(docs)
+    assert got == want and len(want) > 300
+
+
+def test_iob_to_spans_missing_index_counts_as_o(spark):
+    """``token_idx`` is positional: an ``I`` after a missing index starts
+    a new entity, as it would after an ``O`` token."""
+    rows = [
+        (0, 0, "B", "PER"), (0, 1, "I", "PER"), (0, 3, "I", "PER"), (0, 4, "I", "PER"),
+        (1, 1, "I", "LOC"), (1, 2, "I", "LOC"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, token_idx int, ent_iob string, ent_type string"
+    ).withColumn("span", S.make_span(F.col("token_idx") * 6, F.col("token_idx") * 6 + 5))
+    got = sorted(
+        (r.doc_id, r.token_span.begin_token, r.token_span.end_token, r.span.begin, r.span.end)
+        for r in iob_to_spans(df).collect()
+    )
+    assert got == [(0, 0, 2, 0, 11), (0, 3, 5, 18, 29), (1, 1, 3, 6, 17)]
+
+
 def test_iob_spans_roundtrip(iob_tokens):
     ents = iob_to_spans(iob_tokens)
     back = spans_to_iob(iob_tokens.drop("ent_iob", "ent_type"), ents)

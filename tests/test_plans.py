@@ -350,9 +350,8 @@ def test_no_accidental_nested_loop_joins_across_registry(spark):
         "alpha_mixture",  # 1-row normalizer broadcast over strata rows
         "incontext_order",  # ivf_assign's k-centroid broadcast (as ivf_clusters)
         "q11_important_parts",  # Q11's grand-total scalar: 1-row broadcast
-        # broadcast-bounded build sides: dictionary frame (length-gated
-        # entry join), k centroids, corpus-constant scalar
-        "extract_dict_rowwise", "ivf_clusters", "tfidf_top_terms",
+        # broadcast-bounded build sides: k centroids, corpus-constant scalar
+        "ivf_clusters", "tfidf_top_terms",
         "cluster_sample",  # ivf_assign's k-centroid broadcast (as ivf_clusters)
         # PQ tiers: queries x broadcast codebooks (m*k-row model) for the
         # ADC lookup tables, and the k-centroid probe broadcast — all
@@ -390,6 +389,36 @@ def test_q2_correlated_subquery_decorrelates(spark):
     plan = plan_of(q2_min_cost_supplier(spark, "/root/testdata/sf0.001"), "simple")
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert "min(" in plan and plan.count("Scan parquet") >= 2, plan
+
+
+def test_extract_dict_rowwise_probes_by_first_token(spark, docs):
+    """Each token probes the broadcast dictionary by hash on the entry's
+    first token: no nested-loop join, no lambda over start positions."""
+    from text_extensions_for_pandas_spark.operators.extract import (
+        extract_dict_rowwise,
+    )
+
+    d = create_dict(spark, ["table scan", "spark", ""])
+    plan = plan_of(extract_dict_rowwise(docs, d), "simple")
+    assert "BroadcastHashJoin [__tok" in plan, plan
+    assert "NestedLoopJoin" not in plan and " Exchange " not in plan, plan
+    assert "lambdafunction" not in plan, plan
+
+
+def test_iob_to_spans_windows_only_tagged_tokens(spark):
+    """Every Window sits above the filter that drops ``O`` tokens."""
+    from text_extensions_for_pandas_spark.operators.iob import iob_to_spans
+
+    toks = spark.createDataFrame(
+        [(0, 0, "B", "PER", (0, 4)), (0, 1, "O", None, (5, 7))],
+        "doc_id long, token_idx int, ent_iob string, ent_type string, "
+        "span struct<begin:int,end:int>",
+    )
+    lines = plan_of(iob_to_spans(toks), "simple").splitlines()
+    windows = [i for i, ln in enumerate(lines) if "Window [" in ln]
+    drop_o = [i for i, ln in enumerate(lines) if "Filter NOT (ent_iob" in ln and "<=> O" in ln]
+    assert windows and len(drop_o) == 1, lines
+    assert max(windows) < drop_o[0], "\n".join(lines)
 
 
 def test_extract_dict_single_hash_aggregate(spark, docs):

@@ -134,6 +134,31 @@ def test_contain_join_matches_bruteforce(random_span_tables):
     assert got == want
 
 
+def test_contain_join_zero_length_spans_on_block_edges(spark):
+    """A zero-length span at a container's end lies in block ``end // B``;
+    the result must not depend on ``block_size``, including the estimate."""
+    from text_extensions_for_pandas_spark.operators.join import contain_join
+
+    rows1 = [(0, (0, 4)), (1, (0, 5)), (2, (0, 0)), (2, (3, 6)), (2, (2, 8)), (2, (4, 4))]
+    rows2 = [(0, (4, 4)), (0, (2, 2)), (1, (5, 5))]
+    rows2 += [(2, (k, k)) for k in range(10)] + [(2, (3, 6)), (2, (6, 8))]
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "doc_id long, span struct<begin:int,end:int>"
+    )
+    want = {
+        (d1, a[0], a[1], b[0], b[1])
+        for (d1, a) in rows1
+        for (d2, b) in rows2
+        if d1 == d2 and contains_ref(a, b)
+    }
+    for block_size in (1, 2, 3, 4, 5, None):
+        got = {
+            (r.doc_id, r.first.begin, r.first.end, r.second.begin, r.second.end)
+            for r in contain_join(mk(rows1), mk(rows2), block_size=block_size).collect()
+        }
+        assert got == want, block_size
+
+
 @settings(max_examples=50, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(st.text(alphabet=" ab\tc\n", min_size=0, max_size=60))
 def test_whitespace_tokenizer_offsets_exact(text):
@@ -240,6 +265,7 @@ HOSTILE_TEXTS = [
     "x😀x stream 😀 line break 😀",
     " ".join(["stream"] * 3),
     "word " * 1000 + "stream stream " + "\t" * 7 + "line break",
+    "ΟΔΟΣ ΣΟΦΟΣ. οδος σοφος ΟΔΟΣ",
 ]
 HOSTILE_ENTRIES = ["stream", "stream stream", "line break", "İstanbul", "😀"]
 
@@ -248,8 +274,8 @@ HOSTILE_ENTRIES = ["stream", "stream stream", "line break", "İstanbul", "😀"]
 def hostile_corpus(spark):
     """Empty, NULL and whitespace-only texts, whitespace runs with tabs and
     CRLF, leading/trailing spaces, mixed case, a dotted capital I (whose
-    lowercase is two code points), non-BMP characters, a long document, and
-    an entry that overlaps itself."""
+    lowercase is two code points), non-BMP characters, a long document,
+    word-final capital sigmas, and an entry that overlaps itself."""
     return spark.createDataFrame(
         list(enumerate(HOSTILE_TEXTS)), "doc_id long, text string"
     ).cache()
@@ -286,6 +312,72 @@ def test_dict_extractors_agree_on_hostile_text(spark, hostile_corpus):
     assert spans(
         extract_dict_consolidated_rowwise(hostile_corpus, HOSTILE_ENTRIES).collect()
     ) == spans(consolidated.collect())
+
+
+def test_dict_extractors_skip_blank_entries(spark, random_corpus):
+    """An entry with no tokens matches nothing in all three extractors."""
+    from text_extensions_for_pandas_spark.functions.text import (
+        tokenize_whitespace,
+    )
+    from text_extensions_for_pandas_spark.operators.consolidate import consolidate
+    from text_extensions_for_pandas_spark.operators.extract import (
+        create_dict,
+        extract_dict,
+        extract_dict_consolidated_rowwise,
+        extract_dict_rowwise,
+    )
+
+    entries = ["", "spark", "   "]
+    d = create_dict(spark, entries)
+    batch = extract_dict(tokenize_whitespace(random_corpus), d)
+    want = {_match_key(r) for r in batch.collect()}
+    assert want and {k[-1] for k in want} == {1}
+    assert {_match_key(r) for r in extract_dict_rowwise(random_corpus, d).collect()} == want
+
+    spans = lambda rows: {  # noqa: E731
+        (r.doc_id, r.span.begin, r.span.end, r.entry_id) for r in rows
+    }
+    consolidated = consolidate(batch.select("doc_id", "span", "entry_id"), on="span")
+    assert spans(
+        extract_dict_consolidated_rowwise(random_corpus, entries).collect()
+    ) == spans(consolidated.collect())
+    assert extract_dict_rowwise(random_corpus, create_dict(spark, ["", " "])).count() == 0
+    assert extract_dict_consolidated_rowwise(random_corpus, ["", " "]).count() == 0
+
+
+def test_rowwise_probe_matches_batch_on_large_dictionary(spark, hostile_corpus):
+    """2,000 generated entries: many share a first token, most have
+    several tokens, and some repeat under different ids."""
+    import random
+
+    from text_extensions_for_pandas_spark.functions.text import (
+        tokenize_whitespace,
+    )
+    from text_extensions_for_pandas_spark.operators.extract import (
+        create_dict,
+        extract_dict,
+        extract_dict_rowwise,
+    )
+
+    rng = random.Random(11)
+    vocab = [
+        "stream", "STREAM", "line", "break", "word", "İstanbul", "i̇stanbul",
+        "😀", "x😀x", "ΟΔΟΣ", "σοφος", "ΣΟΦΟΣ.", "absent", "other",
+    ]
+    entries = [
+        " ".join(rng.choice(vocab) for _ in range(rng.choice([1, 2, 2, 3, 3, 4])))
+        for _ in range(1900)
+    ]
+    entries += rng.sample(entries, 100)
+    assert len(entries) == 2000 and len(set(entries)) < 1900
+    d = create_dict(spark, entries)
+    want = {_match_key(r) for r in extract_dict(tokenize_whitespace(hostile_corpus), d).collect()}
+    got = {_match_key(r) for r in extract_dict_rowwise(hostile_corpus, d).collect()}
+    assert got == want
+    # duplicates, multi-token entries and the sigma document all matched
+    assert len({k[-1] for k in want}) > 100
+    assert any(k[2] - k[1] >= 3 for k in want)
+    assert any(k[0] == len(HOSTILE_TEXTS) - 1 for k in want)
 
 
 def test_consolidated_rowwise_matches_batch_pipeline(spark, random_corpus):

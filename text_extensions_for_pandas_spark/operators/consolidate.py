@@ -7,7 +7,11 @@ its begin >= the end of the most recently kept span.  This scan is
 inherently sequential *per document*, so it runs as a grouped-map pandas UDF
 partitioned by ``doc_id`` — each document's spans are consolidated
 independently and in parallel across the corpus (SURVEY.md §4 "known-hard
-items").  The per-doc scan is O(n log n) numpy, not a Python row loop.
+items").  Within each group the order is one numpy ``lexsort``
+(O(n log n)), but the scan that follows is a Python ``for`` loop over
+every span (:func:`_greedy_left_to_right`).  :func:`consolidate_array` runs
+the same policy as a column fold, with no Python worker, for plans where
+one row holds a document's spans.
 
 Edge semantics preserved from the reference scan (``consolidate.py:61-83``):
 duplicated zero-length spans are *all* kept (begin == threshold is not
@@ -94,7 +98,7 @@ def consolidate(
     setup cost per doc (ruinous for corpora of millions of small docs), so
     docs are hashed into ``num_buckets`` groups (default: ~32× the shuffle
     parallelism) and each UDF call consolidates a whole bucket of documents
-    with a single vectorized scan.  Every document lands entirely in one
+    with one sort and one scan.  Every document lands entirely in one
     bucket, so semantics are unchanged; bucket count scales the shuffle
     without any per-doc overhead.
     """

@@ -304,44 +304,41 @@ def extract_dict(
 
 
 def _doc_tokens(documents: DataFrame, text_col: str, doc_col: str) -> DataFrame:
-    """``(doc_col, __t, __segs, __k, __lt)``: each document's whitespace
-    tokens as native arrays — the row-local twin of
+    """``(doc_col, __lt, __ch)``: each document's whitespace tokens as
+    native arrays, the row-local twin of
     :func:`~text_extensions_for_pandas_spark.functions.text.tokenize_whitespace`.
-    ``__t`` is the text with tabs and newlines mapped to spaces, so every
-    separator is one character; ``__segs`` is its single-space split, empty
-    segments kept; ``__k`` holds each token's segment index and ``__lt``
-    each token lowercased.  Each array is its own column, so no lambda
-    re-runs the split per element."""
-    segs = F.col("__segs")
-    return (
-        documents.select(
-            F.col(doc_col), F.translate(F.col(text_col), "\t\n\r", "   ").alias("__t")
-        )
-        .withColumn("__segs", F.split("__t", " "))
-        .withColumn(
-            "__k", F.filter(F.sequence(F.lit(0), F.size(segs) - 1), lambda k: segs[k] != "")
-        )
-        .withColumn("__lt", F.transform("__k", lambda k: F.lower(segs[k])))
+    With tabs and newlines mapped to spaces (so every separator is one
+    character), ``__lt`` holds the lowercased tokens,
+    ``array_remove(split(lower(text), ' '), '')``, and ``__ch`` the chunks
+    of one token and the spaces before it, in original case, for
+    :func:`_char_span`.  Lowercasing the whole text splits the same as
+    lowercasing each token: it never adds or drops a space, and the one
+    context-dependent mapping (final sigma) stops at a space.  No lambda
+    builds either array, so exploding ``__lt`` stays in generated code.
+    ``__lt`` is never NULL (a NULL text has no tokens): together with an
+    outer explode, that keeps the optimizer from adding a NULL or size
+    filter under the scan, which would split every text a second time."""
+    return documents.select(
+        F.col(doc_col), F.translate(F.col(text_col), "\t\n\r", "   ").alias("__t")
+    ).select(
+        F.col(doc_col),
+        F.coalesce(
+            F.array_remove(F.split(F.lower("__t"), " "), ""), F.array().cast("array<string>")
+        ).alias("__lt"),
+        F.regexp_extract_all("__t", F.lit(" *[^ ]+"), F.lit(0)).alias("__ch"),
     )
 
 
-def _char_span(first: Column, last: Column) -> Column:
-    """The char span of tokens ``first`` through ``last``, from the
-    :func:`_doc_tokens` columns.  The end is the length of the text up to
-    the ``k+1``-th space, ``k`` being the last token's segment; the begin is
-    the end less the match's own segments.  Finding that space scans the
-    text, so a document costs O(matches × length); called per match only."""
-    k = F.col("__k")
-    end = F.length(F.call_function("substring_index", "__t", F.lit(" "), k[last] + 1))
-    own = F.length(F.array_join(F.slice("__segs", k[first] + 1, k[last] - k[first] + 1), " "))
-    # a one-element transform evaluates the scan once for both offsets
-    return F.transform(F.array(end), lambda e: make_span(e - own, e))[0]
-
-
-def _matches_at(lt: Column, i: Column, toks: Column, n) -> Column:
-    """Whether the lowercased tokens ``lt`` hold entry ``toks`` (``n``
-    tokens) at position ``i``; the first token alone rejects most starts."""
-    return (lt[i] == toks[0]) & (F.slice(lt, i + 1, n) == toks)
+def _char_span(i: Column, n: Column) -> Column:
+    """The char span of the ``n`` tokens from token ``i``, from the
+    :func:`_doc_tokens` chunks: the end is the length of the first
+    ``i + n`` chunks, and the begin is that end less the match's own
+    chunks without their leading spaces.  Joining the chunks is linear in
+    the text, so call it only for matched tokens."""
+    chunks = F.col("__ch")
+    end = F.length(F.array_join(F.slice(chunks, 1, i + n), ""))
+    own = F.length(F.ltrim(F.array_join(F.slice(chunks, i + 1, n), "")))
+    return make_span(end - own, end)
 
 
 def extract_dict_consolidated_rowwise(
@@ -357,17 +354,18 @@ def extract_dict_consolidated_rowwise(
 
     The dictionary rides in the plan as literals (gazetteers are small by
     contract, reference ``spanner/extract.py:93-109``).  Per document: the
-    native token arrays of :func:`_doc_tokens`, one ``filter`` lambda per
+    native token array of :func:`_doc_tokens`, one ``filter`` lambda per
     entry over the candidate starts, consolidation of the matches in token
     units (token order is char order, so the kept set is the same), and
-    char offsets for the kept matches only.  Output:
-    ``(doc_id, span, entry_id)``.
+    char offsets for the kept matches only.  An entry with no tokens
+    matches nothing.  Output: ``(doc_id, span, entry_id)``.
     """
     from text_extensions_for_pandas_spark.operators.consolidate import (
         consolidate_array,
     )
 
     lt = F.col("__lt")
+    element_type = "struct<begin:int,end:int,entry_id:int>"
 
     def entry_matches(parts: list[str], eid: int):
         # factory so each closure binds its own parts/eid (and the lambdas
@@ -378,7 +376,7 @@ def extract_dict_consolidated_rowwise(
             F.size(lt) >= n,
             F.filter(
                 F.sequence(F.lit(0), F.size(lt) - n),
-                lambda i: _matches_at(lt, i, toks, n),
+                lambda i: (lt[i] == toks[0]) & (F.slice(lt, i + 1, n) == toks),
             ),
         ).otherwise(F.array().cast("array<int>"))
         return F.transform(
@@ -388,16 +386,23 @@ def extract_dict_consolidated_rowwise(
             ),
         )
 
+    # the empty array types the flatten when no entry has a token
     matches = F.flatten(
-        F.array(*[entry_matches(e.lower().split(), eid) for eid, e in enumerate(entries)])
+        F.array(
+            F.array().cast(f"array<{element_type}>"),
+            *[
+                entry_matches(parts, eid)
+                for eid, parts in enumerate(e.lower().split() for e in entries)
+                if parts
+            ],
+        )
     )
-    kept = consolidate_array(
-        matches, element_type="struct<begin:int,end:int,entry_id:int>"
-    )
+    kept = consolidate_array(matches, element_type=element_type)
     spans = F.transform(
         kept,
         lambda m: F.struct(
-            _char_span(m["begin"], m["end"] - 1).alias("span"), m["entry_id"].alias("entry_id")
+            _char_span(m["begin"], m["end"] - m["begin"]).alias("span"),
+            m["entry_id"].alias("entry_id"),
         ),
     )
     return _doc_tokens(documents, text_col, doc_col).select(
@@ -411,41 +416,42 @@ def extract_dict_rowwise(
     text_col: str = "text",
     doc_col: str = "doc_id",
 ) -> DataFrame:
-    """Gazetteer matching computed entirely *within each document row* —
-    no explode-to-token-rows, no window, no aggregation.
+    """Gazetteer matching without a shuffle: each token probes the
+    dictionary by its first token.
 
-    Per row: split the text into the native token arrays of
-    :func:`_doc_tokens`, join the (broadcast) dictionary on
-    ``size(tokens) >= n_toks``, keep each candidate start with one
-    ``filter`` lambda (first token, then the sliced run against the entry),
-    and compute char offsets only for the matched starts.  Because the plan
-    is stateless row logic + a broadcast join, it runs unchanged on
-    Structured Streaming (where :func:`extract_dict`'s groupBy would need a
-    watermark) and on 100 TB batch scans it trades :func:`extract_dict`'s
-    shuffle for per-row compute — the better plan when dictionaries are
-    small and documents are short.
+    Per row: the lowercased token array of :func:`_doc_tokens` is exploded
+    with its positions, and each token joins the (broadcast) dictionary on
+    ``token = toks[0]`` as a hash join.  A candidate at position ``i`` is
+    kept when the entry fits (``i + n_toks <= size``) and the ``n_toks``
+    tokens from ``i`` equal the entry; char offsets are computed for kept
+    candidates only.  The work grows with the tokens plus the first-token
+    hits, not with tokens × entries, and no step runs an interpreted
+    lambda.  An entry with no tokens matches nothing.  Because the plan is
+    stateless row logic + a broadcast join, it runs unchanged on Structured
+    Streaming (where :func:`extract_dict`'s groupBy would need a
+    watermark); on batch scans it trades :func:`extract_dict`'s shuffle for
+    a per-match pass over the document's chunks — the better plan when
+    documents are short.
 
     Same output contract as :func:`extract_dict`:
     ``(doc_id, token_span, span, entry_id)``.
     """
-    with_dict = _doc_tokens(documents, text_col, doc_col).join(
-        F.broadcast(dictionary.select("entry_id", "toks", "n_toks")),
-        F.size("__lt") >= F.col("n_toks"),
-        "inner",
+    probe = F.broadcast(
+        dictionary.select("entry_id", "toks", "n_toks", F.get("toks", 0).alias("__first"))
     )
-    lt, n = F.col("__lt"), F.col("n_toks")
-    starts = F.filter(
-        F.sequence(F.lit(0), F.size(lt) - n),
-        lambda i: _matches_at(lt, i, F.col("toks"), n),
+    lt, i, n = F.col("__lt"), F.col("__i"), F.col("n_toks")
+    cands = (
+        _doc_tokens(documents, text_col, doc_col)
+        .select(F.col(doc_col), "__lt", "__ch", F.posexplode_outer("__lt").alias("__i", "__tok"))
+        .join(probe, F.col("__tok") == F.col("__first"))
+        .filter((i + n <= F.size(lt)) & (F.slice(lt, i + 1, n) == F.col("toks")))
     )
-    spans = F.transform(
-        starts,
-        lambda i: F.struct(
-            make_token_span(i, i + n).alias("token_span"),
-            _char_span(i, i + n - 1).alias("span"),
-        ),
+    return cands.select(
+        F.col(doc_col),
+        make_token_span(i, i + n).alias("token_span"),
+        _char_span(i, n).alias("span"),
+        "entry_id",
     )
-    return with_dict.select(F.col(doc_col), F.inline(spans), "entry_id")
 
 
 def extract_split(

@@ -66,30 +66,39 @@ def iob_to_spans(
     """IOB2 tags → entity span table (reference ``iob_to_spans``,
     ``io/conll.py:856-938``, an iterative prefix-extension loop).
 
-    Spark-first: classic sessionization — ``entity_id = running count of 'B'
-    tags``, then group non-O runs.  Output: ``(doc keys..., token_span, span,
-    ent_type)`` with char spans covering first..last token; entity type taken
-    from the run's first token (``min_by`` — deterministic, unlike ``first``
-    after a shuffle).
+    Spark-first: classic sessionization over the tagged tokens only.  The
+    ``O`` tokens are dropped first, so the window sorts and scans only the
+    tokens that can be in an entity; ``entity_id`` is the running count of
+    entity starts, and each run is grouped.  Output: ``(doc keys...,
+    token_span, span, ent_type)`` with char spans covering first..last
+    token; entity type taken from the run's first token (``min_by`` —
+    deterministic, unlike ``first`` after a shuffle).
 
-    An ``I`` token whose predecessor is ``O`` (malformed IOB2) starts its own
-    entity, matching the reference's repair-first behavior.
+    A run starts at a ``B``, or at an ``I`` whose predecessor is ``O`` or
+    missing (malformed IOB2), matching the reference's repair-first
+    behavior.  ``token_idx`` is the token's position in its tokenization
+    (the token-span contract): the predecessor of token ``k`` is token
+    ``k - 1``, and an index absent from ``tokens`` counts as an ``O``, as
+    the document start does.  On input with gaps in ``token_idx`` an ``I``
+    right after a gap therefore starts a new entity.  A token with a NULL
+    tag does not break a run, and is not part of one.
     """
     keys = _keys(doc_col)
     w = Window.partitionBy(*keys).orderBy("token_idx")
-    prev_iob = F.lag(F.col(iob_col), 1, "O").over(w)
-    # run starts at B, or at malformed I following O / doc start
-    is_start = (F.col(iob_col) == "B") | (
-        (F.col(iob_col) == "I") & (prev_iob == "O")
+    iob = F.col(iob_col)
+    kept = tokens.filter(~iob.eqNullSafe("O"))
+    prev_idx = F.lag("token_idx").over(w)
+    is_start = (iob == "B") | (
+        (iob == "I") & F.coalesce(prev_idx != F.col("token_idx") - 1, F.lit(True))
     )
-    tagged = tokens.withColumn(
+    tagged = kept.withColumn(
         "__entity_id",
         F.sum(F.when(is_start, 1).otherwise(0)).over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
     ents = (
-        tagged.filter(F.col(iob_col) != "O")
+        tagged.filter(iob.isNotNull())
         .groupBy(*keys, "__entity_id")
         .agg(
             F.min("token_idx").alias("__first_tok"),

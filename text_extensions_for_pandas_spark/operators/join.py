@@ -85,12 +85,15 @@ def _blocked_pairs(
     span_col: str,
     doc_col: str,
     block_size: int | None,
+    contains: bool = False,
 ) -> DataFrame:
     """Interval-blocking candidate generation shared by overlap/contain join.
 
     Each span is replicated into every fixed-size block it touches
     (``explode(sequence(begin div B, end div B))``), candidates are found by
-    equijoin on ``(doc_id, block)``, then deduplicated.  Reference:
+    equijoin on ``(doc_id, block)``, then deduplicated.  With ``contains``
+    the ``first`` (container) side also takes block ``end div B``, where a
+    zero-length span at its end lies.  Reference:
     ``spanner/join.py:126-155``; block size defaults to the mean span length
     of the inputs, estimated with a cheap pre-aggregation
     (reference ``spanner/join.py:129-134``).
@@ -111,15 +114,15 @@ def _blocked_pairs(
         )
         block_size = max(int(stats or 1), 1)
 
-    def blocks(span: Column) -> Column:
+    def blocks(span: Column, through_end: bool = False) -> Column:
         # max(end-1, begin) keeps zero-length spans in exactly one block
-        last = F.greatest(span["end"] - 1, span["begin"])
+        last = span["end"] if through_end else F.greatest(span["end"] - 1, span["begin"])
         return F.sequence(
             F.floor(span["begin"] / block_size), F.floor(last / block_size)
         )
 
     lhs = _prefixed(first, span_col, first_name, doc_col).withColumn(
-        "__block", F.explode(blocks(F.col(first_name)))
+        "__block", F.explode(blocks(F.col(first_name), through_end=contains))
     )
     rhs = (
         _prefixed(second, span_col, second_name, doc_col)
@@ -167,7 +170,8 @@ def contain_join(
     (reference ``spanner/join.py:174-203``): blocked equijoin + containment
     residual filter."""
     pairs = _blocked_pairs(
-        first, second, first_name, second_name, span_col, doc_col, block_size
+        first, second, first_name, second_name, span_col, doc_col, block_size,
+        contains=True,
     )
     return pairs.filter(S.contains(F.col(first_name), F.col(second_name)))
 

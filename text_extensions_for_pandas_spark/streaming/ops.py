@@ -260,9 +260,9 @@ def streaming_extract_dict(documents: DataFrame, dictionary: DataFrame) -> DataF
     token rows (a groupBy — needs a watermark on a stream), while
     ``extract_dict_rowwise`` is stateless per-document logic + a broadcast
     stream-static join, which streams without state.  Per document it
-    splits the text into native token arrays, tests each dictionary
-    entry's candidate starts with one ``filter`` lambda, and computes char
-    offsets only for the matches."""
+    splits the text into native token arrays, probes the dictionary with
+    each token as an entry's first token, and computes char offsets only
+    for the matches."""
     from text_extensions_for_pandas_spark.operators.extract import (
         extract_dict_rowwise,
     )
