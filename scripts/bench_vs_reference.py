@@ -20,6 +20,11 @@ Timing discipline:
 
 Usage: python scripts/bench_vs_reference.py [sf_dir]   (default sf0.1)
 Prints one JSON line: {op: {"reference_s": .., "spark_s": .., "rows": ..}}.
+
+Needs the reference library ``text_extensions_for_pandas`` importable; the
+test suite skips its reference-differential tests without it, but this
+script fails at import.  It is kept as the only head-to-head measurement
+against the paper's own library (BASELINE.md "Head-to-head").
 """
 
 from __future__ import annotations

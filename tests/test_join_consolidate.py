@@ -93,6 +93,29 @@ def test_overlap_join_block_size_robust(spark):
         assert got == expected == [(0, 50), (500, 501)]
 
 
+@pytest.mark.parametrize("join", [overlap_join, contain_join])
+def test_span_join_estimates_block_size_without_a_job(spark, join):
+    """With ``block_size=None`` the mean-length estimate is part of the
+    join's plan: building the join launches no job, and the action gives
+    the same rows as an explicit block size."""
+    first = span_df(spark, [(0, 0, 100), (0, 500, 502), (1, 3, 9)])
+    second = span_df(spark, [(0, 50, 60), (0, 501, 502), (1, 4, 4), (1, 9, 9)])
+    sc = spark.sparkContext
+    group = f"span-join-build-{join.__name__}"
+    sc.setJobGroup(group, join.__name__)
+    try:
+        out = join(first, second)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    key = lambda df: sorted(  # noqa: E731
+        (r.doc_id, r.first.begin, r.first.end, r.second.begin, r.second.end)
+        for r in df.collect()
+    )
+    assert key(out) == key(join(first, second, block_size=7))
+
+
 def test_consolidate_left_to_right(spark):
     # reference semantics: sort (begin asc, end desc), keep longest
     # non-overlapping at each position

@@ -23,13 +23,14 @@ Design:
   tie-broken scalar — the same justified driver-side pattern as
   connected components' convergence check in ``operators/graph.py``),
   then one lazy rewrite.  Rounds are persisted and lineage is cut with
-  ``localCheckpoint`` every few iterations so the plan stays bounded.
+  ``cut_lineage`` every few iterations so the plan stays bounded.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
 from text_extensions_for_pandas_spark.session import local_frame
 
 
@@ -236,7 +237,7 @@ def train_bpe(
         merges.append((a, b))
         words = apply_merge(words, a, b)
         if (i + 1) % checkpoint_every == 0:
-            words = words.localCheckpoint()
+            words = words.transform(cut_lineage, eager=True)
         else:
             words = words.persist()
             words.count()

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
 from text_extensions_for_pandas_spark.session import local_frame
 
 
@@ -117,7 +118,7 @@ def create_f1_report(
     # per_class feeds three output branches (itself, micro, macro); without
     # a lineage cut the gold/pred match joins execute once per branch.  The
     # frame is one row per entity class — trivially small at any scale.
-    per_class = per_class.localCheckpoint(eager=False)
+    per_class = per_class.transform(cut_lineage, eager=False)
     micro = per_class.agg(
         F.lit("__micro__").alias("ent_type"),
         F.sum("tp").alias("tp"),
@@ -169,7 +170,7 @@ def create_classification_report(
     # the contingency table feeds four branches (per-label, accuracy, macro,
     # weighted); cut lineage so the corpus scan runs once.  |labels|^2 rows —
     # trivially small at any scale.
-    ct = ct.localCheckpoint(eager=False)
+    ct = ct.transform(cut_lineage, eager=False)
     support = ct.groupBy(F.col("__gold").alias("label")).agg(
         F.sum("n").alias("support")
     )
@@ -195,7 +196,7 @@ def create_classification_report(
         F.round(f1, 6).alias("f1"),
         "support",
         "tp",
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
     accuracy = per_label.agg(
         F.lit("__accuracy__").alias("label"),
         F.round(F.sum("tp") / F.greatest(F.sum("support"), F.lit(1)), 6).alias(

@@ -13,6 +13,14 @@ every span (:func:`_greedy_left_to_right`).  :func:`consolidate_array` runs
 the same policy as a column fold, with no Python worker, for plans where
 one row holds a document's spans.
 
+The pandas island stays because the column fold does not scale with
+matches per document.  A ``collect_list`` + :func:`consolidate_array` +
+``inline`` plan was measured against it (``local[4]``, same digests): on
+the sf0.1 registry input (26,849 rows) the fold was faster, 0.50 -> 0.21 s,
+but on one document with 20,000 matches it was 10-18x slower, 0.44 ->
+4.5 s with overlapping matches and 0.44 -> 7.9 s with disjoint ones, since
+the fold's ``array_append`` copies the kept array at every element.
+
 Edge semantics preserved from the reference scan (``consolidate.py:61-83``):
 duplicated zero-length spans are *all* kept (begin == threshold is not
 skipped), and ties at the same begin keep only the longest.
@@ -87,7 +95,6 @@ def consolidate(
     on: str = "span",
     how: str = "left_to_right",
     doc_col: str = "doc_id",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Rows of ``df`` that survive overlap elimination on span column ``on``.
 
@@ -96,8 +103,9 @@ def consolidate(
 
     Scale shape: one ``applyInPandas`` call per *document* would pay pandas
     setup cost per doc (ruinous for corpora of millions of small docs), so
-    docs are hashed into ``num_buckets`` groups (default: ~32× the shuffle
-    parallelism) and each UDF call consolidates a whole bucket of documents
+    docs are hashed into 8 buckets per shuffle partition
+    (``spark.sql.shuffle.partitions``) and each UDF call consolidates a
+    whole bucket of documents
     with one sort and one scan.  Every document lands entirely in one
     bucket, so semantics are unchanged; bucket count scales the shuffle
     without any per-doc overhead.
@@ -108,13 +116,11 @@ def consolidate(
             f"'left_to_right' is supported"
         )
     schema = df.schema
-    if num_buckets is None:
-        # 8 buckets per shuffle partition: few enough that pandas per-call
-        # setup amortizes, many enough that one bucket (≈ rows/num_buckets)
-        # stays well inside executor memory and AQE can rebalance.  For very
-        # large corpora pass num_buckets explicitly to cap bucket size.
-        shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-        num_buckets = shuffle * 8
+    # 8 buckets per shuffle partition: few enough that pandas per-call setup
+    # amortizes, many enough that one bucket (≈ rows/num_buckets) stays well
+    # inside executor memory and AQE can rebalance.
+    shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    num_buckets = shuffle * 8
 
     def _consolidate_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:

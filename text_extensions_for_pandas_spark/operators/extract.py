@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from text_extensions_for_pandas_spark.functions.spans import make_span, make_token_span
+from text_extensions_for_pandas_spark.operators.lineage import cut_lineage
 from text_extensions_for_pandas_spark.session import local_frame
 
 
@@ -485,7 +486,7 @@ def extract_split(
     # derive from split_points, which is usually itself an extract subplan
     # — cut lineage so it evaluates once; the (doc, span) frame is tiny
     # next to the corpus it came from
-    points = split_points.select(doc_col, "span").localCheckpoint(eager=False)
+    points = split_points.select(doc_col, "span").transform(cut_lineage, eager=False)
     sp = points.withColumn(
         "__prev_end", F.coalesce(F.lag(F.col("span")["end"]).over(w), F.lit(0))
     )

@@ -96,23 +96,28 @@ def _blocked_pairs(
     zero-length span at its end lies.  Reference:
     ``spanner/join.py:126-155``; block size defaults to the mean span length
     of the inputs, estimated with a cheap pre-aggregation
-    (reference ``spanner/join.py:129-134``).
+    (reference ``spanner/join.py:129-134``) that runs inside the join's
+    action, not at definition.
     """
     if block_size is None:
         # Sample-bounded estimate: block size is a performance heuristic
         # (any value yields identical results after the residual filter),
         # so don't pay a full evaluation of both input subplans for it —
-        # limit() caps the estimate pass at a few partitions regardless of
-        # input size.
-        stats = (
+        # limit() caps the estimate at a few partitions regardless of input
+        # size.  It is a scalar subquery of the join's own plan, so building
+        # the join launches no job.
+        block_size = (
             first.select(S.length(span_col).alias("l")).limit(10_000)
             .unionAll(
                 second.select(S.length(span_col).alias("l")).limit(10_000)
             )
-            .agg(F.avg("l"))
-            .collect()[0][0]
+            .agg(
+                F.greatest(
+                    F.coalesce(F.avg("l").cast("long"), F.lit(1)), F.lit(1)
+                )
+            )
+            .scalar()
         )
-        block_size = max(int(stats or 1), 1)
 
     def blocks(span: Column, through_end: bool = False) -> Column:
         # max(end-1, begin) keeps zero-length spans in exactly one block

@@ -11,6 +11,12 @@ directory configured (``SparkContext.setCheckpointDir`` or the
 ``spark.checkpoint.dir`` conf, which SparkContext applies at startup) —
 one knob flips every cut site to fault-tolerant storage for cluster
 runs, with zero behavior change when the knob is unset.
+
+The one exception is the per-batch ``localCheckpoint`` inside the
+streaming ``foreachBatch`` loops (``streaming/ops.py``): they stay local
+under any setting, because a batch whose blocks are lost replays from the
+stream's own checkpoint, and a reliable copy per batch would only add a
+write.
 """
 
 from __future__ import annotations

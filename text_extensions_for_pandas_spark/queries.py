@@ -1102,11 +1102,11 @@ def _entry_block_size(*entry_lists: list[str]) -> int:
     """Mean character length of the dict entries, driver-side — a dict
     span's length IS its matched entry's length, so this is the same
     mean-span-length heuristic ``_blocked_pairs`` would estimate with a
-    cluster round-trip, computed for free.  Block size is performance-only
-    (identical join results for any value), so the queries pass it
-    explicitly and skip the estimate job: measured at sf0.1 the estimate
-    action cost ~1.5s warm because limit() cannot short-circuit the dict
-    extraction feeding it."""
+    subquery over both inputs, computed for free.  Block size is
+    performance-only (identical join results for any value), so the queries
+    pass it explicitly and skip the estimate: measured at sf0.1 it cost
+    ~1.5s warm as its own action, because limit() cannot short-circuit the
+    dict extraction feeding it."""
     entries = [e for lst in entry_lists for e in lst]
     return max(1, round(sum(len(e) for e in entries) / len(entries)))
 
@@ -8887,32 +8887,7 @@ FROM chunks ORDER BY doc_id, chunk_idx
 # first -- so every entry is re-verified by the third-party oracle at most
 # every 2 rounds.  The full registry is always locally verified by
 # scripts/check_oracle.py regardless of position.
-#
-# Round-10 order: [1-11] the eleven late-r9 entries that had never had a
-# driver CORRECTNESS row (lang_id_script, wat_anchor_text, cdx_select,
-# cdx_fetch, token_budget_sample, sitemap_urls, crawl_freshness,
-# band_index_ingest, upsample_mixture, cjk_quality, term_blocklist --
-# term_blocklist re-verified AFTER the r9-judge-found normalization
-# asymmetry fix, with punctuated terms now in its fixture and oracle);
-# [12-16] the five r06 entries that went three rounds driver-stale
-# (lang_id, q3_shipping_priority, q5_region_revenue, q_top_customers,
-# q8_market_share) -- the r9 verdict's 16 owed slots all land in this
-# gate, before anything new; [17-18] the two entries NEW in r10
-# (multilingual_quality -- the ru/it/pt/nl/ar/hi language-dispatched
-# quality gate; cdx_mirror_select -- mirror -> select -> ranged fetch
-# with the pushed prefix filter plan-asserted); [19-20] two entries
-# whose plans/values changed this round (doc_quality: STOPWORDS grew
-# with the new language profiles; gopher_rules: Unicode-aware stopword
-# cleanup); [21-50] the thirty most-stale r07-verified entries.  Below
-# the boundary: the seventeen remaining r07 entries (r11-first), the
-# r08 block, then the r09 block, then the THREE entries added late-r10
-# (corpus_diff, token_budgets_by_group, near_dup_char_cjk — never
-# driver-gated; the r11 gate owes them together with the seventeen r07
-# entries, 20 slots total).  Staleness histogram after this round:
-# never:3 / r7:17 / r8:47 / r9:49 / r10:50.
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # -- [1-11] the ELEVEN late-r9 entries never yet driver-gated,
-    # -- exactly as the r9 comment promised (r10-first)
     "lang_id_script": (q_lang_id_script, Q_LANG_ID_SCRIPT_SQL),
     "wat_anchor_text": (q_wat_anchor_text, Q_WAT_ANCHOR_TEXT_SQL),
     "cdx_select": (q_cdx_select, Q_CDX_SELECT_SQL),
@@ -8924,33 +8899,18 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "upsample_mixture": (q_upsample_mixture, Q_UPSAMPLE_MIXTURE_SQL),
     "cjk_quality": (q_cjk_quality, Q_CJK_QUALITY_SQL),
     "term_blocklist": (q_term_blocklist, Q_TERM_BLOCKLIST_SQL),
-    # -- [12-16] the five r06-verified entries displaced three rounds
-    # -- ago, now re-gated (lang_id's plan ALSO changed this round:
-    # -- it/pt/nl/ru/ar/hi marker profiles -- oracle SQL is generated
-    # -- from the same dict)
     "lang_id": (q_lang_id, Q_LANG_ID_SQL),
     "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
     "q5_region_revenue": (q5_region_revenue, Q5_SQL),
     "q_top_customers": (q_top_customers, Q_TOP_CUSTOMERS_SQL),
     "q8_market_share": (q8_market_share, Q8_SQL),
-    # -- [17-18] NEW r10: the multilingual quality dispatch (good
-    # -- ru/it/pt/nl prose passes, damaged twins fail, detection AND
-    # -- dispatch hashed closed-form) and the CDX parquet-mirror
-    # -- selection path (pushed StringStartsWith plan-asserted in
-    # -- test_cdx.py)
     "multilingual_quality": (
         q_multilingual_quality,
         Q_MULTILINGUAL_QUALITY_SQL,
     ),
     "cdx_mirror_select": (q_cdx_mirror_select, Q_CDX_MIRROR_SELECT_SQL),
-    # -- [19-20] re-gated because their values/plans changed this
-    # -- round: doc_quality (STOPWORDS grew with the new profiles;
-    # -- its oracle SQL is generated from the same constant) and
-    # -- gopher_rules (stopword token cleanup is now Unicode-aware)
     "doc_quality": (q_doc_quality, Q_DOC_QUALITY_SQL),
     "gopher_rules": (q_gopher_rules, Q_GOPHER_RULES_SQL),
-    # -- [21-50] the thirty most-stale r07-verified entries
-    # -- (jsonl_ingest ... dedup_paragraphs)
     "jsonl_ingest": (q_jsonl_ingest, Q_JSONL_INGEST_SQL),
     "text_ingest": (q_text_ingest, Q_TEXT_INGEST_SQL),
     "repeated_substrings": (q_repeated_substrings, Q_REPEATED_SUBSTRINGS_SQL),
@@ -8987,11 +8947,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q16_supplier_variety": (q16_supplier_variety, Q16_SQL),
     "q20_promotion_suppliers": (q20_promotion_suppliers, Q20_SQL),
     "dedup_paragraphs": (q_dedup_paragraphs, Q_DEDUP_PARAGRAPHS_SQL),
-    # ------------------- gate boundary (position 50) -------------------
-    # -- [51-67] the seventeen remaining r07-verified entries -- these
-    # -- rotate into the r11 gate FIRST (most driver-stale), followed
-    # -- by the forty-seven r08-verified entries and then the
-    # -- forty-nine r09-verified entries below
     "bpe_pair_counts": (q_bpe_pair_counts, Q_BPE_PAIR_COUNTS_SQL),
     "dsir_weights": (q_dsir_weights, Q_DSIR_WEIGHTS_SQL),
     "boilerplate_removal": (q_boilerplate_removal, Q_BOILERPLATE_SQL),
@@ -9015,7 +8970,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "pq_topk": (q_pq_topk, Q_PQ_TOPK_SQL),
     "ivfpq_topk": (q_ivfpq_topk, Q_IVFPQ_TOPK_SQL),
     "semantic_dedup": (q_semantic_dedup, Q_SEMANTIC_DEDUP_SQL),
-    # -- the forty-seven r08-verified entries
     "extract_links": (q_extract_links, Q_EXTRACT_LINKS_SQL),
     "link_graph": (q_link_graph, Q_LINK_GRAPH_SQL),
     "pagerank": (q_pagerank, Q_PAGERANK_SQL),
@@ -9069,7 +9023,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "q10_returned_items": (q10_returned_items, Q10_SQL),
     "q18_large_volume": (q18_large_volume_customers, Q18_SQL),
     "exactsubstr_clean": (q_exactsubstr_clean, Q_EXACTSUBSTR_CLEAN_SQL),
-    # -- the forty-nine r09-verified entries
     "wat_link_graph": (q_wat_link_graph, Q_WAT_LINK_GRAPH_SQL),
     "multimodal_semantic_dedup": (
         q_multimodal_semantic_dedup,
@@ -9128,25 +9081,11 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "align_to_tokens": (q_align_to_tokens, Q_ALIGN_SQL),
     "flag_suspicious": (q_flag_suspicious, Q_FLAG_SQL),
     "token_count": (q_token_count, Q_TOKEN_COUNT_SQL),
-    # -- NEW late-r10 (below the boundary; rotates into the r11 gate
-    # -- together with the seventeen stale r07 entries at the top of
-    # -- this below-boundary section): snapshot diff + per-host churn
-    # -- — the incremental-crawl front's "what changed since the last
-    # -- dump" primitive.  Verified locally at sf0.001 AND sf0.01 when
-    # -- added.
     "corpus_diff": (q_corpus_diff, Q_CORPUS_DIFF_SQL),
-    # -- NEW late-r10, same below-boundary r11-first placement:
-    # -- per-group token budgets (the multilingual curriculum-sizing
-    # -- step; the window PARTITIONS by group, so no global sort).
-    # -- Verified locally at sf0.001 AND sf0.01 when added.
     "token_budgets_by_group": (
         q_token_budgets_by_group,
         Q_TOKEN_BUDGETS_BY_GROUP_SQL,
     ),
-    # -- NEW late-r10, same below-boundary r11-first placement:
-    # -- char-shingle MinHash near-dup (word shingles are silent on
-    # -- unsegmented scripts; closed-form 193/209 Jaccard per planted
-    # -- pair).  Verified locally at sf0.001 AND sf0.01 when added.
     "near_dup_char_cjk": (q_near_dup_char_cjk, Q_NEAR_DUP_CHAR_CJK_SQL),
 }
 
